@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import scala.reflect.{ClassTag, classTag}
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.geo.expressions.WkbGeomTypeExpr
-import graft.llm.expressions.{DotFpExpr, InterCountExpr, LshBucketExpr, MinHashSigsExpr, ShingleBasesExpr, SignWordExpr}
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.types.IntegerType
+import graft.llm.expressions.{CdcCutsExpr, DotFpExpr, InterCountExpr, LshBucketExpr, MinHashSigsExpr, NormalizeUnicodeExpr, ShingleBasesExpr, SignWordExpr}
 
 /** Spark extensions entry point: installs the engine's native Catalyst
   * expressions into every session of the application via
@@ -32,81 +34,67 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.IntersectCountRewrite)
-    ext.injectFunction((
-      FunctionIdentifier(graft.geo.GeoFunctions.GetWkbGeomType),
-      new ExpressionInfo(classOf[WkbGeomTypeExpr].getName,
-        graft.geo.GeoFunctions.GetWkbGeomType),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "get_wkb_geom_type takes exactly 1 argument")
-        WkbGeomTypeExpr(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(graft.llm.LlmFunctions.DotFp),
-      new ExpressionInfo(classOf[DotFpExpr].getName, graft.llm.LlmFunctions.DotFp),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "dot_fp takes exactly 2 arguments")
-        DotFpExpr(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(graft.llm.LlmFunctions.MinHashSigs),
-      new ExpressionInfo(classOf[MinHashSigsExpr].getName,
-        graft.llm.LlmFunctions.MinHashSigs),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "minhash_sigs takes exactly 2 arguments")
-        MinHashSigsExpr(children.head, intLiteral(children(1), "minhash_sigs"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(graft.llm.LlmFunctions.ShingleBases),
-      new ExpressionInfo(classOf[ShingleBasesExpr].getName,
-        graft.llm.LlmFunctions.ShingleBases),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "shingle_bases takes exactly 2 arguments")
-        ShingleBasesExpr(children.head, intLiteral(children(1), "shingle_bases"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(graft.llm.LlmFunctions.InterCount),
-      new ExpressionInfo(classOf[InterCountExpr].getName,
-        graft.llm.LlmFunctions.InterCount),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "inter_count takes exactly 2 arguments")
-        InterCountExpr(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(graft.llm.LlmFunctions.LshBucket),
-      new ExpressionInfo(classOf[LshBucketExpr].getName,
-        graft.llm.LlmFunctions.LshBucket),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "lsh_bucket takes exactly 2 arguments")
-        LshBucketExpr(children.head, intLiteral(children(1), "lsh_bucket"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(graft.llm.LlmFunctions.SignWord),
-      new ExpressionInfo(classOf[SignWordExpr].getName,
-        graft.llm.LlmFunctions.SignWord),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "sign_word takes exactly 2 arguments")
-        SignWordExpr(children.head, intLiteral(children(1), "sign_word"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(graft.llm.LlmFunctions.NormalizeUnicode),
-      new ExpressionInfo(
-        classOf[graft.llm.expressions.NormalizeUnicodeExpr].getName,
-        graft.llm.LlmFunctions.NormalizeUnicode),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "normalize_unicode takes exactly 2 arguments")
-        val form = children(1) match {
-          case Literal(v, _) if v != null => v.toString
-          case other => throw new IllegalArgumentException(
-            s"normalize_unicode form must be a string literal, got $other")
-        }
-        graft.llm.expressions.NormalizeUnicodeExpr(children.head, form)
-      }))
+    GraftExtensions.functions.foreach(ext.injectFunction)
+  }
+}
+
+/** The one table of native SQL functions: each row binds a SQL name to
+  * its expression class and builder. The extension injects the rows;
+  * [[GraftExtensions.ensure]] registers them on a session built
+  * without the extension. */
+object GraftExtensions {
+
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, FunctionBuilder)
+
+  /** A call's arguments. Constant arguments parameterize codegen, so
+    * they must be literals, and every function rejects a non-literal
+    * with the same message. */
+  private final class Args(fn: String, children: Seq[Expression]) {
+    def size: Int = children.size
+    def apply(i: Int): Expression = children(i)
+    def int(i: Int): Int = literal(i, "an INT") { case Literal(v: Int, IntegerType) => v }
+    def long(i: Int): Long = literal(i, "an integral") {
+      case Literal(v: Long, LongType) => v
+      case Literal(v: Int, IntegerType) => v.toLong
+    }
+    def string(i: Int): String = literal(i, "a string") { case Literal(v, _) if v != null => v.toString }
+
+    private def literal[T](i: Int, kind: String)(pick: PartialFunction[Expression, T]): T =
+      pick.applyOrElse(children(i), (other: Expression) =>
+        throw new IllegalArgumentException(s"$fn: expected $kind literal argument, got $other"))
   }
 
-  private def intLiteral(e: Expression, fn: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: expected an INT literal argument, got $other")
+  private def row[E <: Expression: ClassTag](name: String, arities: Int*)(build: Args => E): FunctionDescription =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, name),
+      (children: Seq[Expression]) => {
+        require(arities.contains(children.size),
+          s"$name takes ${arities.mkString(" or ")} argument(s), got ${children.size}")
+        build(new Args(name, children))
+      })
+
+  val functions: Seq[FunctionDescription] = Seq(
+    row[WkbGeomTypeExpr]("get_wkb_geom_type", 1)(a => WkbGeomTypeExpr(a(0))),
+    row[DotFpExpr]("dot_fp", 2)(a => DotFpExpr(a(0), a(1))),
+    row[InterCountExpr]("inter_count", 2)(a => InterCountExpr(a(0), a(1))),
+    row[MinHashSigsExpr]("minhash_sigs", 2)(a => MinHashSigsExpr(a(0), a.int(1))),
+    row[ShingleBasesExpr]("shingle_bases", 2)(a => ShingleBasesExpr(a(0), a.int(1))),
+    row[LshBucketExpr]("lsh_bucket", 2)(a => LshBucketExpr(a(0), a.int(1))),
+    row[SignWordExpr]("sign_word", 2)(a => SignWordExpr(a(0), a.int(1))),
+    // the form ('NFC'|'NFD'|'NFKC'|'NFKD') is checked by the expression
+    row[NormalizeUnicodeExpr]("normalize_unicode", 2)(a => NormalizeUnicodeExpr(a(0), a.string(1))),
+    // cdc_cuts(text [, divisor]): the divisor defaults to Fingerprint.CdcDivisor
+    row[CdcCutsExpr]("cdc_cuts", 1, 2)(a =>
+      if (a.size == 1) CdcCutsExpr(a(0)) else CdcCutsExpr(a(0), a.long(1))))
+
+  /** Registers every row this session does not already map to the same
+    * expression class: a no-op on a session built with the extension,
+    * and it still replaces a user function that took one of the names. */
+  def ensure(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) =>
+      if (!registry.lookupFunction(id).exists(_.getClassName == info.getClassName))
+        registry.registerFunction(id, info, build)
+    }
   }
 }

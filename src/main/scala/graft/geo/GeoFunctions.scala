@@ -1,18 +1,14 @@
 package graft.geo
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.geo.expressions.WkbGeomTypeExpr
 
 /** SQL registration surface for the geo functions — the engine's
   * equivalent of the reference's `register_all_udfs`
   * (`/root/reference/src/dask_felleskomponenter/udfs/udf_tools.py:111-121,248-272`,
   * `udfs/udf_conversions.py:62-91`).
   *
-  * `get_wkb_geom_type` is injected into the session FunctionRegistry as
-  * a native Catalyst expression rather than a ScalaUDF: the expression
+  * `get_wkb_geom_type` is a native Catalyst expression rather than a
+  * ScalaUDF (a row of the [[graft.GraftExtensions]] table): the expression
   * participates in whole-stage codegen (a direct static call on the
   * 5-byte header, no closure dispatch or null boxing) and accepts both
   * BINARY (WKB bytes) and STRING (hex) arguments like the reference's
@@ -21,25 +17,13 @@ import graft.geo.expressions.WkbGeomTypeExpr
   */
 object GeoFunctions {
 
-  val GetWkbGeomType  = "get_wkb_geom_type"
   val CurvedToLinear  = "curved_to_linear_wkb"
   val GenerateContours = "generate_contours_udf"
 
   def registerAll(spark: SparkSession): Unit = {
-    registerGetWkbGeomType(spark)
+    graft.GraftExtensions.ensure(spark)
     registerCurvedToLinearWkb(spark)
     registerGenerateContours(spark)
-  }
-
-  def registerGetWkbGeomType(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[WkbGeomTypeExpr].getName, GetWkbGeomType)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(GetWkbGeomType),
-      info,
-      (children: Seq[Expression]) => {
-        require(children.size == 1, s"$GetWkbGeomType takes exactly 1 argument")
-        WkbGeomTypeExpr(children.head)
-      })
   }
 
   /** Curved→linear WKB conversion (reference

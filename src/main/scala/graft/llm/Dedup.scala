@@ -221,7 +221,7 @@ object Dedup {
   def dupSpanStats(docs: DataFrame, idCol: String, textCol: String,
       gramN: Int = 8,
       grams: GramMaterialization = GramMaterialization.Persist): DataFrame = {
-    LlmFunctions.registerShingleBases(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     val q = graft.Names.quoted _
     val gramSets = docs
       .filter(length(trim(col(q(textCol)))) > 0)
@@ -282,7 +282,7 @@ object Dedup {
   def dupGramCounts(docs: DataFrame, idCol: String, textCol: String,
       gramN: Int): DataFrame = {
     require(gramN > 0, "gramN must be positive")
-    LlmFunctions.registerShingleBases(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     val q = graft.Names.quoted _
     docs
       .filter(size(graft.llm.TextAnalysis.tokens(col(q(textCol)))) >= gramN)
@@ -352,7 +352,7 @@ object Dedup {
   def stripSpans(docs: DataFrame, idCol: String, textCol: String,
       gramN: Int, dupGrams: DataFrame): DataFrame = {
     require(gramN > 0, "gramN must be positive")
-    LlmFunctions.registerShingleBases(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     val q = graft.Names.quoted _
     val tokRows = docs
       .select(col(q(idCol)).as("doc_id"),
@@ -428,7 +428,7 @@ object Dedup {
     // rows within a gramN — the fleissPivot distinct-classes guard
     require(gramNs.distinct == gramNs, s"duplicate gramN in $gramNs")
     require(minOccs.distinct == minOccs, s"duplicate minOcc in $minOccs")
-    LlmFunctions.registerShingleBases(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     val q = graft.Names.quoted _
     val session = docs.sparkSession
     import session.implicits._

@@ -252,29 +252,9 @@ object Fingerprint {
     spark.udf.register("fingerprint_containment_fp",
       (a: Seq[Long], b: Seq[Long]) =>
         containmentFp(Option(a).map(_.toArray).orNull, Option(b).map(_.toArray).getOrElse(Array.empty)))
-    // cdc_cuts registers as a NATIVE expression (not a UDF): the
-    // chunking hot path stays inside whole-stage codegen and skips
-    // the UTF8String → String → UTF-8 bytes double copy. Same name,
-    // same contract — FingerprintSpec pins native == cdcCuts.
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cdc_cuts"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.llm.expressions.CdcCutsExpr].getName, "cdc_cuts"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1 || children.size == 2,
-          "cdc_cuts takes a text argument and an optional divisor literal")
-        if (children.size == 1) graft.llm.expressions.CdcCutsExpr(children.head)
-        else {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          import org.apache.spark.sql.types.{IntegerType, LongType}
-          val d = children(1) match {
-            case Literal(v: Long, LongType) => v
-            case Literal(v: Int, IntegerType) => v.toLong
-            case other => throw new IllegalArgumentException(
-              s"cdc_cuts: divisor must be an integral literal, got $other")
-          }
-          graft.llm.expressions.CdcCutsExpr(children.head, d)
-        }
-      })
+    // cdc_cuts is a NATIVE expression (a GraftExtensions row), not a
+    // UDF: the chunking hot path stays inside whole-stage codegen.
+    // FingerprintSpec pins native == cdcCuts.
+    graft.GraftExtensions.ensure(spark)
   }
 }

@@ -42,7 +42,7 @@ object Importance {
   def bucketCounts(docs: DataFrame, idCol: String, textCol: String,
       buckets: Int): DataFrame = {
     require(buckets > 0, "buckets must be positive")
-    LlmFunctions.registerShingleBases(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     docs.select(col(graft.Names.quoted(idCol)).as("doc_id"),
       explode(expr(s"shingle_bases(${graft.Names.quoted(textCol)}, 1)"))
         .as("base"))
@@ -119,7 +119,7 @@ object Importance {
   def scoreArrivals(arrivals: DataFrame, idCol: String, textCol: String,
       weights: DataFrame, unseenWppm: Long, buckets: Int): DataFrame = {
     require(buckets > 0, "buckets must be positive")
-    LlmFunctions.registerShingleBases(arrivals.sparkSession)
+    graft.GraftExtensions.ensure(arrivals.sparkSession)
     arrivals.select(col(graft.Names.quoted(idCol)).as("doc_id"),
       explode(expr(s"shingle_bases(${graft.Names.quoted(textCol)}, 1)"))
         .as("base"))

@@ -111,7 +111,7 @@ object IvfIndex {
     * driver. */
   def seededSearch(vectors: DataFrame, queries: DataFrame, nLists: Int,
       k: Int, nProbe: Int): DataFrame = {
-    LlmFunctions.registerDotFp(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     // first nLists vectors BY RANK of vec_id (TakeOrdered — no global
     // sort), not `vec_id < nLists`: sparse or offset id spaces would
     // silently produce an empty codebook and empty results.
@@ -308,7 +308,7 @@ object IvfIndex {
       assigned: DataFrame, edges: DataFrame, k: Int,
       maxCellSize: Int = 0): DataFrame = {
     require(k > 0, "k must be positive")
-    LlmFunctions.registerDotFp(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     val ids = eraseIds.select(col("vec_id"))
     val touchedCells = assigned.join(ids, Seq("vec_id"), "left_semi")
       .select(col("cell")).distinct()
@@ -396,7 +396,7 @@ object IvfIndex {
       nAssign: Int = 1): DataFrame = {
     require(k > 0, "k must be positive")
     require(nAssign >= 1, "nAssign must be positive")
-    LlmFunctions.registerDotFp(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     val bc = vectors.sparkSession.sparkContext.broadcast(centroids)
     val aAssigned = quantized(arrivals).select(col("vec_id"),
       explode(probeCellsUdfOf(bc, nAssign)(col("e"))).as("cell"))
@@ -614,7 +614,7 @@ object IvfIndex {
     * byte-identical to the in-session training path. */
   def searchWithCodebook(vectors: DataFrame, queries: DataFrame,
       centroids: Array[Array[Long]], k: Int, nProbe: Int): DataFrame = {
-    LlmFunctions.registerDotFp(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     val bc = vectors.sparkSession.sparkContext.broadcast(centroids)
     val probeCellsUdf = probeCellsUdfOf(bc, nProbe)
     val cells = quantized(vectors).select(col("vec_id"), cellOfUdf(bc)(col("e")).as("cell"))
@@ -653,7 +653,7 @@ object IvfIndex {
     * DuckDB. */
   def semanticDedup(vectors: DataFrame, nLists: Int, minDotFp: Long,
       nIter: Int = 3, maxCellSize: Int = 0): DataFrame = {
-    LlmFunctions.registerDotFp(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     val centroids = fitFixedPoint(vectors, nLists, nIter)
     val bc = vectors.sparkSession.sparkContext.broadcast(centroids)
     val members = quantized(vectors)
@@ -704,7 +704,7 @@ object IvfIndex {
     * membership, the same n/k bound the batch dedup relies on. */
   def annIngest(arrivals: DataFrame, corpus: DataFrame, nLists: Int,
       minDotFp: Long, nIter: Int = 3): DataFrame = {
-    LlmFunctions.registerDotFp(corpus.sparkSession)
+    graft.GraftExtensions.ensure(corpus.sparkSession)
     val centroids = fitFixedPoint(corpus, nLists, nIter)
     val bc = corpus.sparkSession.sparkContext.broadcast(centroids)
     // cell + embedding in ONE projection per side — joining two
@@ -769,7 +769,7 @@ object IvfIndex {
   private def inCellKnn(vectors: DataFrame, centroids: Array[Array[Long]],
       k: Int, maxCellSize: Int): (DataFrame, DataFrame) = {
     require(k > 0, "k must be positive")
-    LlmFunctions.registerDotFp(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     val bc = vectors.sparkSession.sparkContext.broadcast(centroids)
     val members = quantized(vectors)
       .select(col("vec_id"), cellOfUdf(bc)(col("e")).as("cell"))
@@ -820,7 +820,7 @@ object IvfIndex {
       return inCellKnn(vectors, centroids, k, maxCellSize)._2
         .select(col("src"), col("dst"), col("dot_fp"))
     require(k > 0, "k must be positive")
-    LlmFunctions.registerDotFp(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     val bc = vectors.sparkSession.sparkContext.broadcast(centroids)
     val assigned = quantized(vectors)
       .select(col("vec_id"),
@@ -869,7 +869,7 @@ object IvfIndex {
     * variants directly. */
   def graphExpandWithCodebook(vectors: DataFrame, queries: DataFrame,
       centroids: Array[Array[Long]], edges: DataFrame, k: Int): DataFrame = {
-    LlmFunctions.registerDotFp(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     val seeds = searchWithCodebook(vectors, queries, centroids, k, 1)
       .select(col("query_id"), col("vec_id"))
     val cand = seeds.unionByName(
@@ -971,7 +971,7 @@ object IvfIndex {
     * Scores use the same fixed-point `dot_fp` as the exact path. */
   def search(queries: DataFrame, indexed: DataFrame, model: Model,
       k: Int, nProbe: Int): DataFrame = {
-    LlmFunctions.registerDotFp(queries.sparkSession)
+    graft.GraftExtensions.ensure(queries.sparkSession)
     val centroids = model.centroids
     val probes = udf { (emb: Seq[Float]) =>
       Model(centroids).probeCells(emb.toArray, nProbe)

@@ -1,147 +1,15 @@
 package graft.llm
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.types.IntegerType
-
-import graft.llm.expressions.{DotFpExpr, InterCountExpr, LshBucketExpr, MinHashSigsExpr, NormalizeUnicodeExpr, ShingleBasesExpr, SignWordExpr}
 
 /** SQL registration surface for the LLM-pipeline functions (same
-  * pattern as `graft.geo.GeoFunctions`). */
+  * pattern as `graft.geo.GeoFunctions`): the native expressions from
+  * the [[graft.GraftExtensions]] table plus the UDF-backed hashes. */
 object LlmFunctions {
 
-  val DotFp = "dot_fp"
-  val MinHashSigs = "minhash_sigs"
-  val ShingleBases = "shingle_bases"
-
-  val InterCount = "inter_count"
-  val LshBucket = "lsh_bucket"
-  val SignWord = "sign_word"
-  val NormalizeUnicode = "normalize_unicode"
-
   def registerAll(spark: SparkSession): Unit = {
-    registerDotFp(spark)
-    registerMinHashSigs(spark)
-    registerShingleBases(spark)
-    registerInterCount(spark)
-    registerLshBucket(spark)
-    registerSignWord(spark)
-    registerNormalizeUnicode(spark)
+    graft.GraftExtensions.ensure(spark)
     SimHash.register(spark)
     Fingerprint.register(spark)
-  }
-
-  /** `normalize_unicode(s, 'NFC'|'NFD'|'NFKC'|'NFKD')` — the form must
-    * be a string literal (it parameterizes codegen). */
-  def registerNormalizeUnicode(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(
-      classOf[NormalizeUnicodeExpr].getName, NormalizeUnicode)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(NormalizeUnicode),
-      info,
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"$NormalizeUnicode takes exactly 2 arguments")
-        val form = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-              if v != null => v.toString
-          case other => throw new IllegalArgumentException(
-            s"$NormalizeUnicode form must be a string literal, got $other")
-        }
-        NormalizeUnicodeExpr(children.head, form)
-      })
-  }
-
-  /** `lsh_bucket(embedding, dim)` — dim must be an integer literal. */
-  def registerLshBucket(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[LshBucketExpr].getName, LshBucket)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(LshBucket),
-      info,
-      (children: Seq[Expression]) => {
-        require(children.size == 2, s"$LshBucket takes exactly 2 arguments")
-        val dim = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"$LshBucket: dim must be an INT literal, got $other")
-        }
-        LshBucketExpr(children.head, dim)
-      })
-  }
-
-  /** `sign_word(embedding, dim)` — dim must be an integer literal. */
-  def registerSignWord(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[SignWordExpr].getName, SignWord)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(SignWord),
-      info,
-      (children: Seq[Expression]) => {
-        require(children.size == 2, s"$SignWord takes exactly 2 arguments")
-        val dim = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"$SignWord: dim must be an INT literal, got $other")
-        }
-        SignWordExpr(children.head, dim)
-      })
-  }
-
-  /** `inter_count(a, b)` — sorted-array intersection cardinality. */
-  def registerInterCount(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[InterCountExpr].getName, InterCount)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(InterCount),
-      info,
-      (children: Seq[Expression]) => {
-        require(children.size == 2, s"$InterCount takes exactly 2 arguments")
-        InterCountExpr(children.head, children(1))
-      })
-  }
-
-  /** `shingle_bases(text, n)` — n must be an integer literal. */
-  def registerShingleBases(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[ShingleBasesExpr].getName, ShingleBases)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(ShingleBases),
-      info,
-      (children: Seq[Expression]) => {
-        require(children.size == 2, s"$ShingleBases takes exactly 2 arguments")
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"$ShingleBases: shingleN must be an INT literal, got $other")
-        }
-        ShingleBasesExpr(children.head, n)
-      })
-  }
-
-  /** `minhash_sigs(bases, k)` — k must be an integer literal. */
-  def registerMinHashSigs(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[MinHashSigsExpr].getName, MinHashSigs)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(MinHashSigs),
-      info,
-      (children: Seq[Expression]) => {
-        require(children.size == 2, s"$MinHashSigs takes exactly 2 arguments")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"$MinHashSigs: numHashes must be an INT literal, got $other")
-        }
-        MinHashSigsExpr(children.head, k)
-      })
-  }
-
-  /** `dot_fp(a, b)` as a native codegen expression. */
-  def registerDotFp(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[DotFpExpr].getName, DotFp)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(DotFp),
-      info,
-      (children: Seq[Expression]) => {
-        require(children.size == 2, s"$DotFp takes exactly 2 arguments")
-        DotFpExpr(children.head, children(1))
-      })
   }
 }

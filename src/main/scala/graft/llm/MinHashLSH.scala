@@ -91,7 +91,7 @@ object MinHashLSH {
     * codegen'd loop instead of four interpreted HOF passes. */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int): DataFrame = {
-    LlmFunctions.registerShingleBases(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     // Spread BEFORE the shingle fold: the per-row shingle/hash work is
     // the expensive part and a single-split scan would run it serial
     // (see [[Spread]] — structural no-op on a parallel scan)
@@ -161,7 +161,7 @@ object MinHashLSH {
 
   def bandIndexFromSets(sets: DataFrame, numHashes: Int,
       rowsPerBand: Int): DataFrame = {
-    LlmFunctions.registerMinHashSigs(sets.sparkSession)
+    graft.GraftExtensions.ensure(sets.sparkSession)
     sets.select(col("doc_id"),
       posexplode(bandKeysExpr("s", numHashes, rowsPerBand))
         .as(Seq("band_id", "band_key")))
@@ -426,9 +426,7 @@ object MinHashLSH {
   def fuzzyAdmission(arrivals: DataFrame, idCol: String, textCol: String,
       corpusBands: DataFrame, corpusSets: DataFrame, shingleN: Int,
       numHashes: Int, rowsPerBand: Int, minJaccardFp: Long): DataFrame = {
-    LlmFunctions.registerInterCount(arrivals.sparkSession)
-    LlmFunctions.registerShingleBases(arrivals.sparkSession)
-    LlmFunctions.registerMinHashSigs(arrivals.sparkSession)
+    graft.GraftExtensions.ensure(arrivals.sparkSession)
     val aSets = shingleSets(arrivals, idCol, textCol, shingleN)
     val aBands = aSets.select(col("doc_id"), col("s").as("__sa"),
       posexplode_outer(bandKeysExpr("s", numHashes, rowsPerBand))
@@ -487,7 +485,7 @@ object MinHashLSH {
     * doc vs 8·64 for raw signatures and ~8·|shingles| for the verify
     * sets). */
   def packedWords(sets: DataFrame): DataFrame = {
-    LlmFunctions.registerMinHashSigs(sets.sparkSession)
+    graft.GraftExtensions.ensure(sets.sparkSession)
     sets.select(col("doc_id"), packWordExpr("s").as("w"))
   }
 
@@ -515,9 +513,7 @@ object MinHashLSH {
       textCol: String, corpusBands: DataFrame, corpusWords: DataFrame,
       corpusSets: DataFrame, shingleN: Int, numHashes: Int,
       rowsPerBand: Int, screenMinPpm: Long, minJaccardFp: Long): DataFrame = {
-    LlmFunctions.registerInterCount(arrivals.sparkSession)
-    LlmFunctions.registerShingleBases(arrivals.sparkSession)
-    LlmFunctions.registerMinHashSigs(arrivals.sparkSession)
+    graft.GraftExtensions.ensure(arrivals.sparkSession)
     val aSets = shingleSets(arrivals, idCol, textCol, shingleN)
     val aBands = aSets.select(col("doc_id"), col("s").as("__sa"),
       packWordExpr("s").as("__wa"),
@@ -592,9 +588,7 @@ object MinHashLSH {
       rowsPerBand: Int, thresholds: Seq[Long],
       minJaccardFp: Long): DataFrame = {
     require(thresholds.nonEmpty, "empty threshold grid")
-    LlmFunctions.registerInterCount(arrivals.sparkSession)
-    LlmFunctions.registerShingleBases(arrivals.sparkSession)
-    LlmFunctions.registerMinHashSigs(arrivals.sparkSession)
+    graft.GraftExtensions.ensure(arrivals.sparkSession)
     val session = arrivals.sparkSession
     import session.implicits._
     val grid = thresholds.toDF("screen_min_ppm")
@@ -681,9 +675,7 @@ object MinHashLSH {
       minJaccardFp: Long): DataFrame = {
     require(caps.nonEmpty, "empty cap grid")
     require(caps.forall(_ >= 1L), "a cap below 1 drops every bucket")
-    LlmFunctions.registerInterCount(docs.sparkSession)
-    LlmFunctions.registerShingleBases(docs.sparkSession)
-    LlmFunctions.registerMinHashSigs(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     val session = docs.sparkSession
     import session.implicits._
     val grid = caps.toDF("cap")
@@ -769,7 +761,7 @@ object MinHashLSH {
   def eraseImpact(tombstones: DataFrame, idCol: String,
       corpusSets: DataFrame, corpusCounts: DataFrame, numHashes: Int,
       rowsPerBand: Int, cap: Int): DataFrame = {
-    LlmFunctions.registerMinHashSigs(tombstones.sparkSession)
+    graft.GraftExtensions.ensure(tombstones.sparkSession)
     val t = tombstones.select(col(graft.Names.quoted(idCol)).as("doc_id"))
     val withSets = t
       .join(corpusSets.select(col("doc_id"), col("s")), Seq("doc_id"), "left")
@@ -830,7 +822,7 @@ object MinHashLSH {
   def crossCorpusPairs(left: DataFrame, right: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 8,
       minJaccardFp: Long = 0L, maxBucketSize: Int = 0): DataFrame = {
-    LlmFunctions.registerInterCount(left.sparkSession)
+    graft.GraftExtensions.ensure(left.sparkSession)
     def prep(df: DataFrame, side: String): (DataFrame, DataFrame) = {
       val sets = persistTracked(shingleSets(df, idCol, textCol, shingleN))
       val mh = sets.select(col("doc_id"), expr(s"minhash_sigs(s, $numHashes)").as("mh"))
@@ -897,7 +889,7 @@ object MinHashLSH {
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 1,
       minJaccardFp: Long = 0L, maxBucketSize: Int = 0): DataFrame = {
-    LlmFunctions.registerInterCount(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     val sets = persistTracked(shingleSets(docs, idCol, textCol, shingleN))
     val pairs = candidatePairsFromSets(sets, numHashes, rowsPerBand, maxBucketSize)
     val scored = withJaccardFp(pairs, sets, "doc_a", "doc_b")
@@ -929,8 +921,7 @@ object MinHashLSH {
       dayCol: String, windowDays: Long, shingleN: Int = 3, numHashes: Int = 8,
       minJaccardFp: Long = 0L): DataFrame = {
     require(windowDays > 0, "windowDays must be positive")
-    LlmFunctions.registerInterCount(docs.sparkSession)
-    LlmFunctions.registerMinHashSigs(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     val day = col(graft.Names.quoted(dayCol)).cast("bigint")
     val sets = persistTracked(
       shingleSets(docs, idCol, textCol, shingleN)
@@ -983,7 +974,7 @@ object MinHashLSH {
       sampleLimit: Long = 250L, thresholds: Seq[Long]): DataFrame = {
     require(thresholds.nonEmpty, "at least one threshold")
     require(sampleLimit > 0, "sampleLimit must be positive")
-    LlmFunctions.registerInterCount(docs.sparkSession)
+    graft.GraftExtensions.ensure(docs.sparkSession)
     val sample = docs.filter(col(graft.Names.quoted(idCol)) < sampleLimit)
     val sets = persistTracked(shingleSets(sample, idCol, textCol, shingleN))
     val jaccard = expr(

@@ -831,14 +831,4 @@ object Multimodal {
         }
       }
   }
-
-  /** Wrap a text corpus as fake media payloads (fixture path used by
-    * q27: the documents table stands in for a media table). */
-  def documentsAsMedia(spark: SparkSession, dir: String): Dataset[MediaPayload] = {
-    import spark.implicits._
-    graft.Tables.documents(spark, dir)
-      .selectExpr("doc_id AS id", "'image/fake' AS mediaType",
-        "cast(text AS binary) AS content")
-      .as[MediaPayload]
-  }
 }

@@ -212,8 +212,11 @@ object NbClassifier {
     // majority (doc_id) — and HashPartitioning(doc_id) satisfies the
     // clustered distribution of ALL of them, so the ONE keyed
     // exchange here replaces three stacked exchanges (guide §2.4:
-    // operations keyed the same way share one exchange; the winner
-    // table joins in as a broadcast, which preserves partitioning).
+    // operations keyed the same way share one exchange). The saving
+    // relies on the winner table joining in as a broadcast, which
+    // preserves partitioning; that is the planner's auto-broadcast
+    // choice for a vocab-sized table, not a hint, so a vocab above
+    // the threshold shuffle-joins on w and re-exchanges tf.
     // Spread.byKey no-ops on multi-file production scans, where the
     // w-join may be a shuffle join and AQE keeps byte-based sizing.
     Spread.byKey(docs.select(col(qid).as("doc_id"), col(qt).as("__t")),
@@ -309,7 +312,8 @@ object NbClassifier {
     require(variants.nonEmpty, "need at least one trained variant")
     val s = docIds.sparkSession
     // tag + union the trained counts, then run the verdict pipeline
-    // ONCE over the tagged frame ([[verdictsForVariants]]) — k
+    // ONCE over the tagged frame ([[presentAgg]] feeding
+    // [[verdictsFromPresent]]) — k
     // variants in one totals aggregate, one winner aggregate, zero
     // extra stages. No persist here: callers hand in already-persisted
     // counts, and a union over cached vocab-sized frames is cheaper to

@@ -71,7 +71,7 @@ object Postings {
     * adjacency = |{p ∈ P(w1) : p+1 ∈ P(w2)}| via the sorted merge
     * walk. */
   def phraseCounts(postings: DataFrame, w1: String, w2: String): DataFrame = {
-    LlmFunctions.registerInterCount(postings.sparkSession)
+    graft.GraftExtensions.ensure(postings.sparkSession)
     val a = postings.filter(col("w") === w1).select(col("doc_id"), col("ps").as("pa"))
     val b = postings.filter(col("w") === w2).select(col("doc_id"), col("ps").as("pb"))
     a.join(b, "doc_id")

@@ -162,7 +162,7 @@ object PqIndex {
     require(k > 0, "k must be positive")
     require(rerank >= k, "rerank width must be at least k")
     val spark = vectors.sparkSession
-    LlmFunctions.registerDotFp(spark)
+    graft.GraftExtensions.ensure(spark)
     val codebooks = fitSubspaces(vectors, m, kSub, nIter)
     val bc = spark.sparkContext.broadcast(codebooks)
     val luts = IvfIndex.quantized(queries)
@@ -214,7 +214,7 @@ object PqIndex {
     val m = codebooks.length
     val kSub = codebooks(0).length
     val spark = vectors.sparkSession
-    LlmFunctions.registerDotFp(spark)
+    graft.GraftExtensions.ensure(spark)
     val bcCoarse = spark.sparkContext.broadcast(coarse)
     val bcCb = spark.sparkContext.broadcast(codebooks)
     val index = IvfIndex.quantized(vectors)

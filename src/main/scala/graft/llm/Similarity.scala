@@ -37,7 +37,7 @@ object Similarity {
 
   /** Same arithmetic as a native codegen expression ([[expressions.DotFpExpr]])
     * — the hot-path form used by the top-k operators. Requires
-    * [[LlmFunctions.registerAll]] (done by the operators themselves). */
+    * [[graft.GraftExtensions.ensure]] (done by the operators themselves). */
   def dotFpNative(a: String, b: String): Column = expr(s"dot_fp($a, $b)")
 
   /** Deterministic integer hyperplanes for the sign-LSH bucketing —
@@ -68,7 +68,7 @@ object Similarity {
     * the native `lsh_bucket` expression ([[expressions.LshBucketExpr]])
     * — ONE codegen'd pass over the array instead of 8 `dot_fp`
     * evaluations against plane literals (requires
-    * [[LlmFunctions.registerLshBucket]] on the session — the top-k
+    * [[graft.GraftExtensions.ensure]] on the session — the top-k
     * operators register it themselves). [[bucketExprComposed]] keeps
     * the composed formulation as the semantic cross-check. */
   def bucketExpr(embCol: String, dim: Int): Column =
@@ -194,7 +194,7 @@ object Similarity {
     * selection is two-level ([[topKPerQuery]]): no task ever sorts a
     * query's full candidate list. */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    LlmFunctions.registerDotFp(queries.sparkSession)
+    graft.GraftExtensions.ensure(queries.sparkSession)
     val q = broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("qe")))
     val scored = q.crossJoin(candidates.select(col("vec_id"), col("embedding").as("ce")))
       .select(col("query_id"), col("vec_id"), dotFpNative("qe", "ce").as("dot_fp"))
@@ -231,8 +231,7 @@ object Similarity {
     * the default cap disables the guard. */
   def embeddingNearDupPairs(vectors: DataFrame, minDotFp: Long, dim: Int,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    LlmFunctions.registerDotFp(vectors.sparkSession)
-    LlmFunctions.registerLshBucket(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     require(maxBucketSize >= 2, "maxBucketSize < 2 can never emit a pair")
     def base = vectors.select(col("vec_id"), col("embedding"),
       bucketExpr("embedding", dim).as("bucket"))
@@ -300,7 +299,7 @@ object Similarity {
     * two's-complement value explicitly. Native codegen'd flat loop
     * ([[graft.llm.expressions.SignWordExpr]]): packs at scan speed,
     * no per-element lambda frames, no shuffle. Requires
-    * [[LlmFunctions.registerSignWord]] (the operators do it). */
+    * [[graft.GraftExtensions.ensure]] (the operators do it). */
   def signWordExpr(embCol: String, dim: Int): Column = {
     require(dim >= 1 && dim <= 64, "one word packs at most 64 dims")
     expr(s"sign_word($embCol, $dim)")
@@ -337,8 +336,7 @@ object Similarity {
     * disagreement. */
   def labelAgreementCard(vectors: DataFrame, labelCol: String, k: Int,
       dim: Int, maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    LlmFunctions.registerDotFp(vectors.sparkSession)
-    LlmFunctions.registerLshBucket(vectors.sparkSession)
+    graft.GraftExtensions.ensure(vectors.sparkSession)
     require(k > 0, "k must be positive")
     require(maxBucketSize >= 2, "maxBucketSize < 2 can never score a neighbor")
     val ql = graft.Names.quoted(labelCol)
@@ -394,8 +392,7 @@ object Similarity {
     * votes aggregate over ≤ k rows per query. */
   def knnImputeCard(train: DataFrame, test: DataFrame, labelCol: String,
       k: Int, dim: Int): DataFrame = {
-    LlmFunctions.registerDotFp(train.sparkSession)
-    LlmFunctions.registerLshBucket(train.sparkSession)
+    graft.GraftExtensions.ensure(train.sparkSession)
     require(k > 0, "k must be positive")
     val ql = graft.Names.quoted(labelCol)
     val tr = train.select(col("vec_id"), col("embedding"),
@@ -423,8 +420,7 @@ object Similarity {
   }
 
   def annTopK(queries: DataFrame, candidates: DataFrame, k: Int, dim: Int): DataFrame = {
-    LlmFunctions.registerDotFp(queries.sparkSession)
-    LlmFunctions.registerLshBucket(queries.sparkSession)
+    graft.GraftExtensions.ensure(queries.sparkSession)
     def withBucket(df: DataFrame): DataFrame =
       df.withColumn("bucket", bucketExpr("embedding", dim))
     val q = broadcast(withBucket(queries)
@@ -524,7 +520,7 @@ object Similarity {
     * bounded-selection shape as [[bruteForceTopK]]; the label
     * exclusion rides the scored stage, adding zero shuffles. */
   def hardNegatives(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    LlmFunctions.registerDotFp(queries.sparkSession)
+    graft.GraftExtensions.ensure(queries.sparkSession)
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qe"), col("label").as("__ql")))
     val scored = q.crossJoin(candidates.select(col("vec_id"),

@@ -1032,7 +1032,7 @@ object SimilarityQueries {
   // the oracle embeds the identical 8×64 weight literals and replays
   // the per-element floor sum.
   def q142RandomProjection(s: SparkSession, dir: String): DataFrame = {
-    graft.llm.LlmFunctions.registerDotFp(s)
+    graft.GraftExtensions.ensure(s)
     val planes = Similarity.planeWeights(Dim)
     val parts = planes.zipWithIndex.map { case (w, j) =>
       val arr = w.map(v => s"${v.toDouble}D").mkString("array(", ", ", ")")
@@ -1055,7 +1055,7 @@ object SimilarityQueries {
   // scan-local projection — the card costs one 8-dim brute-force
   // pass, which is exactly the saving the projection buys at scale.
   def q143ProjectedRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.llm.LlmFunctions.registerDotFp(s)
+    graft.GraftExtensions.ensure(s)
     val projArr = Similarity.planeWeights(Dim).map { w =>
       val arr = w.map(v => s"${v.toDouble}D").mkString("array(", ", ", ")")
       s"dot_fp(embedding, $arr)"
@@ -1082,7 +1082,7 @@ object SimilarityQueries {
   // row-local codegen'd projection; the scored stream carries two
   // BIGINTs per pair, and selection is the shared two-level top-k.
   def q206BinaryRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.llm.LlmFunctions.registerSignWord(s)
+    graft.GraftExtensions.ensure(s)
     val corp = graft.Tables.embeddings(s, dir)
       .select(col("vec_id"), Similarity.signWordExpr("embedding", Dim).as("wbits"))
     val qs = corp.filter(col("vec_id") < NumQueryVecs)
@@ -1140,7 +1140,7 @@ object SimilarityQueries {
   // convention. Scale: q23's broadcast queries × corpus scan, one
   // (query, same-label?) window over it, then an anchor-keyed fold.
   def q211TripletMargin(s: SparkSession, dir: String): DataFrame = {
-    graft.llm.LlmFunctions.registerDotFp(s)
+    graft.GraftExtensions.ensure(s)
     val emb = graft.Tables.embeddings(s, dir)
     val q = broadcast(emb.filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -1477,7 +1477,7 @@ object SimilarityQueries {
   // is top-k-sized.
   private val MrlDims = Seq(32, 16, 8)
   def q166MatryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.llm.LlmFunctions.registerDotFp(s)
+    graft.GraftExtensions.ensure(s)
     val emb = graft.Tables.embeddings(s, dir)
     val corp = emb.select(col("vec_id"), col("embedding").as("ce"))
     val qs = broadcast(emb.filter(col("vec_id") < NumQueryVecs)
@@ -1500,7 +1500,7 @@ object SimilarityQueries {
   // directly comparable downstream. Scale: pairs are O(n·w); the
   // verify joins ship only the candidate ids plus their base sets.
   def q171SnmVerified(s: SparkSession, dir: String): DataFrame = {
-    graft.llm.LlmFunctions.registerInterCount(s)
+    graft.GraftExtensions.ensure(s)
     val docs = graft.Tables.documents(s, dir)
     val sets = graft.llm.Caches.persistTracked(
       graft.llm.MinHashLSH.shingleSets(docs, "doc_id", "text", ShingleN))
@@ -1523,7 +1523,7 @@ object SimilarityQueries {
   // O(sampleLimit²) truth pass + two O(n·w) candidate passes, all
   // constant at corpus scale.
   def q174SnmRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.llm.LlmFunctions.registerInterCount(s)
+    graft.GraftExtensions.ensure(s)
     val sample = graft.Tables.documents(s, dir)
       .filter(col("doc_id") < CardSampleLimit)
     val sets = graft.llm.Caches.persistTracked(
@@ -1974,7 +1974,7 @@ object SimilarityQueries {
     // consumers), and only the band-key candidate generation differs
     // per config (the q174 structure; calling recallCard per config
     // would pay the truth pass twice)
-    graft.llm.LlmFunctions.registerInterCount(s)
+    graft.GraftExtensions.ensure(s)
     val sample = graft.Tables.documents(s, dir)
       .filter(col("doc_id") < CardSampleLimit)
     val sets = graft.llm.Caches.persistTracked(

@@ -225,6 +225,16 @@ class ScaleTechniquesSpec extends AnyFunSuite with SparkTestSession {
     // zero vector projects to 0 on every plane → bucket 0; wrong dim → 0
     assert(fresh.sql("SELECT lsh_bucket(array(CAST(0.0 AS FLOAT)), 1)")
       .collect()(0).getLong(0) == 0L)
+    // bit i set iff embedding[i] > 0
+    assert(fresh.sql(
+      "SELECT sign_word(array(CAST(1.0 AS FLOAT), CAST(-1.0 AS FLOAT), CAST(2.0 AS FLOAT)), 3)")
+      .collect()(0).getLong(0) == 5L)
+    // full-width A folds to ASCII under NFKC
+    assert(fresh.sql("SELECT normalize_unicode('Ａ', 'NFKC')")
+      .collect()(0).getString(0) == "A")
+    // empty text has no cut points, with or without a divisor
+    assert(fresh.sql("SELECT size(cdc_cuts('')), size(cdc_cuts('', 64L))")
+      .collect()(0).toSeq == Seq(0, 0))
     // while a UDF-backed function is absent until registerAll is called
     intercept[Exception] {
       fresh.sql("SELECT curved_to_linear_wkb(unhex('01'), 5.0D)").collect()
@@ -234,7 +244,8 @@ class ScaleTechniquesSpec extends AnyFunSuite with SparkTestSession {
     val fns = fresh.catalog.listFunctions().collect().map(_.name).toSet
     Seq("get_wkb_geom_type", "curved_to_linear_wkb", "generate_contours_udf",
       "simhash64", "hamming64", "doc_fingerprints", "dot_fp", "minhash_sigs",
-      "shingle_bases", "inter_count", "lsh_bucket").foreach { f =>
+      "shingle_bases", "inter_count", "lsh_bucket", "sign_word",
+      "normalize_unicode", "cdc_cuts").foreach { f =>
       assert(fns.contains(f), s"$f missing after Graft.registerAll")
     }
   }

@@ -103,7 +103,7 @@ class BbitSweepSpec extends AnyFunSuite with SparkTestSession {
       val aSets = MinHashLSH.shingleSets(arrivals, "doc_id", "text",
         ShingleN)
       val aBands = MinHashLSH.bandIndexFromSets(aSets, NumHashes, 1)
-      LlmFunctions.registerInterCount(spark)
+      graft.GraftExtensions.ensure(spark)
       aBands.join(bands.select(col("doc_id").as("corpus_doc"),
           col("band_id"), col("band_key")), Seq("band_id", "band_key"))
         .select(col("doc_id"), col("corpus_doc")).distinct()

@@ -19,7 +19,7 @@ class DotFpSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("native expression equals the HOF formulation element for element") {
-    LlmFunctions.registerDotFp(spark)
+    graft.GraftExtensions.ensure(spark)
     val rows = vecsDF.select(col("id"),
       Similarity.dotFpNative("a", "b").as("native"),
       Similarity.dotFpExpr("a", "b").as("hof")).collect()
@@ -29,7 +29,7 @@ class DotFpSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("interpreted and codegen paths agree") {
-    LlmFunctions.registerDotFp(spark)
+    graft.GraftExtensions.ensure(spark)
     vecsDF.createOrReplaceTempView("dotfp_vecs")
     val results = Seq("NO_CODEGEN", "CODEGEN_ONLY").map { mode =>
       spark.conf.set("spark.sql.codegen.factoryMode", mode)
@@ -42,7 +42,7 @@ class DotFpSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("null contract: null array, null element, length mismatch") {
-    LlmFunctions.registerDotFp(spark)
+    graft.GraftExtensions.ensure(spark)
     val r1 = spark.sql(
       "SELECT dot_fp(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT)))").collect()(0)
     assert(r1.isNullAt(0))
@@ -57,7 +57,7 @@ class DotFpSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("double arrays and mixed float/double operands work") {
-    LlmFunctions.registerDotFp(spark)
+    graft.GraftExtensions.ensure(spark)
     val r = spark.sql(
       "SELECT dot_fp(array(CAST(0.5 AS DOUBLE), CAST(2.0 AS DOUBLE)), " +
         "array(CAST(2.0 AS FLOAT), CAST(0.25 AS FLOAT)))").collect()(0)
@@ -65,7 +65,7 @@ class DotFpSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("non-array operands are an analysis-time type error") {
-    LlmFunctions.registerDotFp(spark)
+    graft.GraftExtensions.ensure(spark)
     intercept[Exception] {
       spark.sql("SELECT dot_fp(1, 2)").collect()
     }

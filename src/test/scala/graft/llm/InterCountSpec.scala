@@ -11,7 +11,7 @@ import graft.SparkTestSession
 class InterCountSpec extends AnyFunSuite with SparkTestSession {
 
   test("matches size(array_intersect) on random sorted distinct arrays") {
-    LlmFunctions.registerInterCount(spark)
+    graft.GraftExtensions.ensure(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(3)
     def mk() = (0 until rnd.nextInt(40)).map(_ => rnd.nextInt(60).toLong)
@@ -24,7 +24,7 @@ class InterCountSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("interpreted and codegen paths agree; empty and disjoint inputs") {
-    LlmFunctions.registerInterCount(spark)
+    graft.GraftExtensions.ensure(spark)
     import spark.implicits._
     Seq(
       (Seq(1L, 2L, 3L), Seq(2L, 3L, 4L)),
@@ -43,7 +43,7 @@ class InterCountSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("null array → null") {
-    LlmFunctions.registerInterCount(spark)
+    graft.GraftExtensions.ensure(spark)
     val r = spark.sql(
       "SELECT inter_count(CAST(NULL AS ARRAY<BIGINT>), array(1L))").collect()(0)
     assert(r.isNullAt(0))

@@ -10,7 +10,7 @@ import graft.SparkTestSession
 class MinHashSigsSpec extends AnyFunSuite with SparkTestSession {
 
   test("native signatures equal the HOF formulation") {
-    LlmFunctions.registerMinHashSigs(spark)
+    graft.GraftExtensions.ensure(spark)
     import spark.implicits._
     val df = Seq(
       Seq(5L, 123456789L, 42L, 2147483646L),
@@ -26,7 +26,7 @@ class MinHashSigsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("interpreted and codegen paths agree") {
-    LlmFunctions.registerMinHashSigs(spark)
+    graft.GraftExtensions.ensure(spark)
     import spark.implicits._
     Seq(Seq(7L, 77L, 777L)).toDF("bases").createOrReplaceTempView("mh_bases")
     val results = Seq("NO_CODEGEN", "CODEGEN_ONLY").map { mode =>
@@ -40,7 +40,7 @@ class MinHashSigsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("null semantics: null array → null; null elements skipped") {
-    LlmFunctions.registerMinHashSigs(spark)
+    graft.GraftExtensions.ensure(spark)
     val r1 = spark.sql("SELECT minhash_sigs(CAST(NULL AS ARRAY<BIGINT>), 4)").collect()(0)
     assert(r1.isNullAt(0))
     val r2 = spark.sql(
@@ -54,7 +54,7 @@ class MinHashSigsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("non-literal k is rejected") {
-    LlmFunctions.registerMinHashSigs(spark)
+    graft.GraftExtensions.ensure(spark)
     intercept[Exception] {
       spark.sql("SELECT minhash_sigs(array(1L), CAST(rand() * 4 AS INT))").collect()
     }

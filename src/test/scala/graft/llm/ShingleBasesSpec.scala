@@ -16,7 +16,7 @@ class ShingleBasesSpec extends AnyFunSuite with SparkTestSession {
 
   private def compare(texts: Seq[String], n: Int): Unit = {
     import spark.implicits._
-    LlmFunctions.registerShingleBases(spark)
+    graft.GraftExtensions.ensure(spark)
     val df = texts.toDF("text")
     val viaSql = df
       .select(TextAnalysis.tokens(col("text")).as("toks"), col("text"))
@@ -57,7 +57,7 @@ class ShingleBasesSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("interpreted and codegen paths agree") {
-    LlmFunctions.registerShingleBases(spark)
+    graft.GraftExtensions.ensure(spark)
     import spark.implicits._
     Seq("the quick brown fox", "  ", "\tx y z").toDF("text")
       .createOrReplaceTempView("sb_texts")
@@ -72,7 +72,7 @@ class ShingleBasesSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("null text → null") {
-    LlmFunctions.registerShingleBases(spark)
+    graft.GraftExtensions.ensure(spark)
     val r = spark.sql("SELECT shingle_bases(CAST(NULL AS STRING), 3)").collect()(0)
     assert(r.isNullAt(0))
   }

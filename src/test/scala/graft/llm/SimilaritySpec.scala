@@ -155,7 +155,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
 
   test("native sign_word == the composed aggregate spelling, incl. the sign bit") {
     import spark.implicits._
-    LlmFunctions.registerSignWord(spark)
+    graft.GraftExtensions.ensure(spark)
     // deterministic mix of positive/negative/zero values across 64
     // dims — zero must NOT set a bit; dim 63 exercises the Long sign
     val vecs = (0 until 16).map { v =>
@@ -204,7 +204,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
 
   test("ann bucket: identical vectors land in the same bucket") {
     import spark.implicits._
-    LlmFunctions.registerDotFp(spark)
+    graft.GraftExtensions.ensure(spark)
     val v = Array.tabulate(64)(i => (math.sin(i + 1) / 8).toFloat)
     val vecs = Seq((0L, v), (1L, v), (2L, v.map(x => -x))).toDF("vec_id", "embedding")
     val buckets = vecs.select(col("vec_id"), Similarity.bucketExpr("embedding", 64).as("b"))
@@ -263,8 +263,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
 
   test("native lsh_bucket == composed form across dimensions") {
     import spark.implicits._
-    LlmFunctions.registerDotFp(spark)
-    LlmFunctions.registerLshBucket(spark)
+    graft.GraftExtensions.ensure(spark)
     val rnd = new scala.util.Random(29)
     for (d <- Seq(4, 16, 32)) {
       val rows: Seq[(Long, Seq[Float])] =
@@ -280,8 +279,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
 
   test("native lsh_bucket == the composed 8x dot_fp formulation") {
     import spark.implicits._
-    LlmFunctions.registerDotFp(spark)
-    LlmFunctions.registerLshBucket(spark)
+    graft.GraftExtensions.ensure(spark)
     val rnd = new scala.util.Random(13)
     val dim = 64
     val rows: Seq[(Long, Seq[Float])] =
