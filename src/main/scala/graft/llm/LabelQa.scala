@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Label-quality instruments for weak supervision: when two cheap
@@ -188,38 +188,51 @@ object LabelQa {
     * decides whether the design drifted. Empty corpus reads zeros
     * (the [[kappaCard]] coalesce discipline).
     *
-    * Scale shape: one (item, label) aggregate over the ratings
-    * stream, one item-sized rollup, one label-sized marginal — no
-    * joins keyed wider than the item id, nothing driver-side. */
+    * Scale shape, three aggregates and no join (LMFAO's shared-pass
+    * idea, PAPERS.md): one per-item aggregate (k_i and A_i through
+    * the (item, label) counts; input keyed on the item runs both
+    * levels without an exchange), one small aggregate that holds both
+    * the k_i histogram (items per k_i, with their A_i sum) and the
+    * label marginals, and one global row over that table. The
+    * histogram turns `unbalanced_items` into the items whose k_i is
+    * not the largest k_i — `max_by` over distinct k_i rows — instead
+    * of a broadcast max joined back onto every item. Nothing
+    * driver-side, nothing keyed wider than the item id. */
   def fleissCard(ratings: DataFrame, itemCol: String, raterCol: String,
       labelCol: String): DataFrame = {
     val qi = graft.Names.quoted(itemCol)
     val ql = graft.Names.quoted(labelCol)
-    val nic = Caches.persistTracked(
-      ratings.groupBy(col(qi).as("__it"), col(ql).as("__lab"))
-        .agg(count(lit(1)).as("__c")))
-    val per = nic.groupBy(col("__it"))
-      .agg(sum(col("__c")).as("__ki"),
-        sum(col("__c") * col("__c")).as("__ai"))
-    val kmax = per.agg(coalesce(max(col("__ki")), lit(0L)).as("__kmax"))
-    val glob2 = per.crossJoin(broadcast(kmax)).agg(
-      coalesce(count(lit(1)), lit(0L)).as("n_items"),
-      coalesce(max(col("__ki")), lit(0L)).as("n_raters"),
-      coalesce(sum(when(col("__ki") =!= col("__kmax"), 1L)
-        .otherwise(0L)), lit(0L)).as("unbalanced_items"),
-      coalesce(sum(col("__ki")).cast("decimal(38,0)"),
-        lit(0L).cast("decimal(38,0)")).as("__t"),
-      coalesce(sum(col("__ai")).cast("decimal(38,0)"),
-        lit(0L).cast("decimal(38,0)")).as("__a"),
-      coalesce(sum((col("__ki") * (col("__ki") - 1L))
-        .cast("decimal(38,0)")), lit(0L).cast("decimal(38,0)"))
-        .as("__p"))
-    val marg = nic.groupBy(col("__lab"))
-      .agg(sum(col("__c")).cast("decimal(38,0)").as("__m"))
-      .agg(coalesce(sum(col("__m") * col("__m")),
-        lit(0L).cast("decimal(38,0)")).as("__m2"),
-        coalesce(count(lit(1)), lit(0L)).as("n_classes"))
-    glob2.crossJoin(broadcast(marg)).select(
+    val labType = ratings.select(col(ql)).schema.head.dataType
+    val items = ratings.groupBy(col(qi).as("__it"), col(ql).as("__lab"))
+      .agg(count(lit(1)).as("__c"))
+      .groupBy(col("__it"))
+      .agg(sum(col("__c")).as("__k"), sum(col("__c") * col("__c")).as("__ai"))
+    // kind 0: one row per distinct k_i (n = items, a = their A_i sum);
+    // kind 1: one row per label (n = its marginal m_c)
+    val cells = items.select(lit(0).as("__kind"), col("__k"),
+        lit(null).cast(labType).as("__lab"), col("__ai"))
+      .unionByName(ratings.select(lit(1).as("__kind"),
+        lit(null).cast("bigint").as("__k"), col(ql).as("__lab"),
+        lit(0L).as("__ai")))
+      .groupBy(col("__kind"), col("__k"), col("__lab"))
+      .agg(count(lit(1)).as("__n"), sum(col("__ai")).as("__a"))
+    val item = col("__kind") === 0
+    def dec(c: Column): Column = coalesce(sum(c).cast("decimal(38,0)"),
+      lit(0L).cast("decimal(38,0)"))
+    cells.agg(
+      coalesce(sum(when(item, col("__n"))), lit(0L)).as("n_items"),
+      coalesce(max(when(item, col("__k"))), lit(0L)).as("n_raters"),
+      coalesce(sum(when(item, col("__n"))) -
+        max_by(when(item, col("__n")), when(item, col("__k"))), lit(0L))
+        .as("unbalanced_items"),
+      dec(when(item, col("__n") * col("__k"))).as("__t"),
+      dec(when(item, col("__a"))).as("__a"),
+      dec(when(item, col("__n").cast("decimal(38,0)") * col("__k") *
+        (col("__k") - 1L))).as("__p"),
+      dec(when(!item, col("__n").cast("decimal(38,0)") * col("__n")))
+        .as("__m2"),
+      count(when(!item, lit(1))).as("n_classes"))
+      .select(
       col("n_items"), col("n_raters").cast("bigint").as("n_raters"),
       col("n_classes"), col("unbalanced_items"),
       expr("cast((__a - __t) * 1000000 div greatest(__p, 1) as bigint)")

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Link-graph authority scoring — PageRank (Page et al. 1999) in the
@@ -26,12 +27,12 @@ import org.apache.spark.sql.functions._
   * oracle.
   *
   * 100 TB shape: per iteration, ONE shuffle keyed on `src` (the
-  * share join — co-partition `edges` by src to make it map-side) and
-  * one aggregation keyed on `dst`; the driver holds a single scalar
-  * (the node count — the bounded-collect precedent); no adjacency
-  * ever materializes driver-side. Dangling nodes contribute nothing
-  * (their mass evaporates, the standard simplification); in-link-less
-  * nodes settle at the base term. Deep iteration counts should
+  * share join; the edge side's exchange is built once and reused by
+  * every round) and one aggregation keyed on `dst`; the driver holds
+  * a single scalar (the node count — the bounded-collect precedent);
+  * no adjacency ever materializes driver-side. Dangling nodes
+  * contribute nothing (their mass evaporates, the standard
+  * simplification); in-link-less nodes settle at the base term. Deep iteration counts should
   * checkpoint every few rounds (plan depth grows linearly) — the
   * caller's knob, per the dupSpanStats materialization precedent. */
 object LinkRank {
@@ -43,27 +44,38 @@ object LinkRank {
     require(nIter >= 0, "nIter must be non-negative")
     require(scale > 0L, "scale must be positive")
     require(dampNum >= 0L && dampNum <= 100L, "dampNum must be in [0, 100]")
-    val e = Caches.persistTracked(
-      edges.select(col("src").cast("bigint").as("src"),
-        col("dst").cast("bigint").as("dst")))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    val e = withOutDegree(edges)
     val nodes = Caches.persistTracked(
       e.select(col("src").as("v")).union(e.select(col("dst").as("v"))).distinct())
     val n = math.max(nodes.count(), 1L)
     val base = (scale * (100L - dampNum)) / (100L * n)
     var pr = nodes.select(col("v"), lit(scale / n).as("pr"))
     for (_ <- 0 until nIter) {
-      val shares = pr.join(deg.withColumnRenamed("src", "v"), Seq("v"))
-        .select(col("v").as("src"), expr("pr div outdeg").as("share"))
-      val contrib = e.join(shares, Seq("src"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("c"))
-        .withColumnRenamed("dst", "v")
-      pr = nodes.join(contrib, Seq("v"), "left")
+      pr = nodes.join(contributions(e, pr), Seq("v"), "left")
         .select(col("v"),
           (lit(base) + expr(s"(${dampNum}L * coalesce(c, 0L)) div 100L")).as("pr"))
     }
     pr.select(col("v"), col("pr").as("pr_fp"))
   }
+
+  /** The edge list `(src, dst, outdeg)`: the out-degree lands on
+    * every edge once, from a window keyed on `src`, so no round joins
+    * (and re-broadcasts) a degree aggregate. It is deliberately NOT
+    * persisted. Every round joins the same edge subtree, so AQE builds
+    * its exchange (or broadcast) once and reuses it — but AQE reuses
+    * no exchange above a persisted frame's scan (DESIGN.md), so a
+    * persisted edge list would be re-broadcast every round. The one
+    * extra pass is the persisted node frame's fill. */
+  private def withOutDegree(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("bigint").as("src"),
+        col("dst").cast("bigint").as("dst"))
+      .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
+
+  /** One round's in-flow `(v, c)`: every edge carries
+    * `pr(src) div outdeg(src)` to its `dst`. */
+  private def contributions(e: DataFrame, pr: DataFrame): DataFrame =
+    e.join(pr.withColumnRenamed("v", "src"), Seq("src"))
+      .groupBy(col("dst").as("v")).agg(sum(expr("pr div outdeg")).as("c"))
 
   /** Depth-bounded BFS: shortest hop distance from a seed set, along
     * directed edges, up to `maxDepth` hops — the k-hop reachability
@@ -164,28 +176,21 @@ object LinkRank {
     require(nIter >= 0, "nIter must be non-negative")
     require(scale > 0L, "scale must be positive")
     require(dampNum >= 0L && dampNum <= 100L, "dampNum must be in [0, 100]")
-    val e = Caches.persistTracked(
-      edges.select(col("src").cast("bigint").as("src"),
-        col("dst").cast("bigint").as("dst")))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val nodes = Caches.persistTracked(
-      e.select(col("src").as("v")).union(e.select(col("dst").as("v"))).distinct())
+    val e = withOutDegree(edges)
     val sd = Caches.persistTracked(
       seeds.select(col("v").cast("bigint").as("v")).distinct()
         .withColumn("is_seed", lit(true)))
     val nS = math.max(sd.count(), 1L)
     val base = (scale * (100L - dampNum)) / (100L * nS)
-    var pr = nodes.join(broadcast(sd), Seq("v"), "left")
-      .select(col("v"),
-        when(col("is_seed"), lit(scale / nS)).otherwise(lit(0L)).as("pr"))
+    // the seed flag rides the persisted node frame, so no round joins
+    // (and re-broadcasts) the seed set again
+    val nodes = Caches.persistTracked(
+      e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
+        .distinct().join(broadcast(sd), Seq("v"), "left"))
+    var pr = nodes.select(col("v"),
+      when(col("is_seed"), lit(scale / nS)).otherwise(lit(0L)).as("pr"))
     for (_ <- 0 until nIter) {
-      val shares = pr.join(deg.withColumnRenamed("src", "v"), Seq("v"))
-        .select(col("v").as("src"), expr("pr div outdeg").as("share"))
-      val contrib = e.join(shares, Seq("src"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("c"))
-        .withColumnRenamed("dst", "v")
-      pr = nodes.join(contrib, Seq("v"), "left")
-        .join(broadcast(sd), Seq("v"), "left")
+      pr = nodes.join(contributions(e, pr), Seq("v"), "left")
         .select(col("v"),
           (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
             expr(s"(${dampNum}L * coalesce(c, 0L)) div 100L")).as("pr"))

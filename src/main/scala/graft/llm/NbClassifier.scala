@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Trained token-vote text classifier (multinomial naive Bayes reduced
@@ -24,11 +23,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: training is ONE (label, token) aggregate — bounded by
   * classes × token types (Heaps' law), not corpus tokens. Scoring
-  * precomputes the winner PER TOKEN TYPE over that vocab-sized frame
-  * (window over `w`), so the corpus-sized eval side pays one tf
-  * aggregate (map-side combinable), one vocab join on `w`, and one
-  * doc-keyed aggregate — no per-class expansion of the corpus and no
-  * corpus-sized window. The counts frame is the shippable artifact
+  * precomputes the winner PER TOKEN TYPE over that vocab-sized frame,
+  * so the corpus-sized eval side pays one broadcast join on `w` and
+  * two doc-keyed aggregates — no per-class expansion of the corpus
+  * and no corpus-sized window; keyed on `doc_id` it needs no exchange
+  * at all. The winner table is broadcast by hint: a (w, label) row is
+  * tens of bytes, so a 10⁷-type vocabulary is a few hundred MB on
+  * every executor — the bound to watch. The counts frame is the shippable artifact
   * ([[Artifacts.saveIndexFrame]]); totals, vocabulary size, and the
   * winner table all re-derive from it, so a loaded replica scores
   * byte-identically to the session that trained it. */
@@ -105,33 +106,30 @@ object NbClassifier {
           .as("cnt"))
       .filter(col("cnt") > 0L)
 
-  /** The (variant, w) token-presence aggregate every verdict derives
-    * from: each token type's present (label, cnt) pairs. Built ONCE
-    * per predict and shared by [[verdictsFromPresent]] AND the vocab
-    * size in [[labelConsts]] — its row count per variant IS
-    * |vocabulary|, so the old separate `countDistinct(w)` pass over
-    * the counts frame (a second vocab-sized aggregate, two exchanges)
-    * is redundant (r20, guide §2.4: two consumers, one exchange). */
-  private def presentAgg(countsAll: DataFrame): DataFrame =
-    countsAll.groupBy(col("variant"), col("w"))
-      .agg(collect_list(struct(col("label"), col("cnt"))).as("present"))
-
   /** Per-variant class constants folded to ONE array row per variant:
-    * `(variant, labs: array<struct<label, tot, v>>)` — |classes| is
-    * dozens at most, so the whole thing broadcasts by construction.
-    * `sort_array` makes the collected order deterministic. `present`
-    * is [[presentAgg]] of the SAME frame: one distinct-(variant, w)
-    * row per vocab entry, so `count(w)` over it equals the old
-    * `countDistinct(w)` over the raw counts (both skip nulls). */
-  private def labelConsts(countsAll: DataFrame,
-      present: DataFrame): DataFrame =
-    countsAll.groupBy(col("variant"), col("label"))
+    * `(variant, labs: array<struct<label, tot, v>>)`, with `tot` the
+    * class's training mass and `v` the variant's vocabulary size —
+    * |classes| is dozens at most, so the row broadcasts by
+    * construction. Both come out of ONE (variant, kind, key) sum over
+    * two projections of the counts frame — class rows keyed by label,
+    * type rows keyed by token — and one per-variant fold that counts
+    * the type rows and collects the class rows. `sort_array` makes
+    * the collected order deterministic; `v` counts non-null tokens
+    * only. */
+  private def labelConsts(countsAll: DataFrame): DataFrame =
+    countsAll.select(col("variant"), lit(0).as("__k"),
+        col("label").as("__key"), col("cnt"))
+      .unionByName(countsAll.select(col("variant"), lit(1).as("__k"),
+        col("w").as("__key"), lit(0L).as("cnt")))
+      .groupBy(col("variant"), col("__k"), col("__key"))
       .agg(sum(col("cnt")).cast("bigint").as("tot"))
-      .join(present.groupBy(col("variant"))
-        .agg(count(col("w")).as("v")), Seq("variant"))
       .groupBy(col("variant"))
-      .agg(sort_array(collect_list(
-        struct(col("label"), col("tot"), col("v")))).as("labs"))
+      .agg(count(when(col("__k") === 1, col("__key"))).as("v"),
+        sort_array(collect_list(when(col("__k") === 0,
+          struct(col("__key").as("label"), col("tot"))))).as("__lt"))
+      .select(col("variant"), transform(col("__lt"), x =>
+        struct(x("label").as("label"), x("tot").as("tot"), col("v").as("v")))
+        .as("labs"))
 
   /** Row-local argmax of the smoothed fixed-point score over the
     * broadcast `labs` constants, given this row's PRESENT (label,
@@ -153,79 +151,85 @@ object NbClassifier {
       (acc, e) -> CASE WHEN acc.l IS NULL OR e.s > acc.s
         OR (e.s = acc.s AND e.l < acc.l) THEN e ELSE acc END).l""")
 
-  /** The winner tables for a TAGGED union of trained counts frames:
-    * `(variant, w, label_pred)` — the shared [[presentAgg]] joined to
-    * one broadcast of the class constants, one row-local argmax. This
-    * is the whole verdict pipeline: no distinct-grid, no join-back, k
-    * variants in the same shuffles as one. Both inputs are built once
-    * by the caller and shared with the defaults/consts path. */
-  private def verdictsFromPresent(present: DataFrame,
-      consts: DataFrame): DataFrame =
-    present
-      .join(broadcast(consts), Seq("variant"))
+  /** The winner table for a TAGGED union of trained counts frames:
+    * `(variant, w, label_pred)` for every token type, plus ONE row per
+    * variant with a NULL `w` whose label is the unseen-token default
+    * — the same argmax over an empty presence list,
+    * `1·10⁹ div (tot_c + |V|)`: the class with the smallest training
+    * mass, ties → smallest label. The (variant, w) presence aggregate
+    * and the broadcast class constants each have this ONE consumer,
+    * and the table itself has one (the scoring join in [[score]]).
+    * That is the point: AQE does not reuse an exchange above a
+    * persisted frame's scan (DESIGN.md), so a second consumer of any
+    * of them would run its exchange chain again. A variant with no
+    * trained counts gets no constants row, so the inner join drops
+    * its default row too: its tokens then vote NULL. */
+  private def verdicts(countsAll: DataFrame, names: DataFrame): DataFrame = {
+    val present = countsAll.filter(col("w").isNotNull)
+      .groupBy(col("variant"), col("w"))
+      .agg(collect_list(struct(col("label"), col("cnt"))).as("present"))
+    val unseen = names.select(col("variant"),
+      lit(null).cast("string").as("w"),
+      array().cast("array<struct<label: string, cnt: bigint>>").as("present"))
+    present.unionByName(unseen)
+      .join(broadcast(labelConsts(countsAll)), Seq("variant"))
       .select(col("variant"), col("w"),
         argmaxOverLabs("present").as("label_pred"))
-
-  /** The unseen-token default per variant: the same argmax with NO
-    * present labels — `1·10⁹ div (tot_c + |V|)`, i.e. the class with
-    * the smallest training mass, ties → smallest label. One row per
-    * variant WITH trained counts (empty counts → no row). */
-  private def defaultsForVariants(consts: DataFrame): DataFrame =
-    consts.select(col("variant"),
-      argmaxOverLabs(
-        "cast(array() as array<struct<label: string, cnt: bigint>>)")
-        .as("label_dflt"))
+  }
 
   private def tagged(counts: DataFrame): DataFrame =
     counts.select(lit("").as("variant"), col("label"), col("w"),
       col("cnt").cast("bigint").as("cnt"))
 
+  private def singleVerdicts(counts: DataFrame): DataFrame =
+    verdicts(tagged(counts),
+      counts.sparkSession.range(1).select(lit("").as("variant")))
+
   /** The winner table: for every token TYPE in the train vocabulary,
     * the class maximizing the smoothed score (ties → smallest label).
     * Vocab-sized — this is what makes corpus scoring one join. */
-  def tokenVerdicts(counts: DataFrame): DataFrame = {
-    val t = tagged(counts)
-    val present = presentAgg(t)
-    verdictsFromPresent(present, labelConsts(t, present)).drop("variant")
-  }
+  def tokenVerdicts(counts: DataFrame): DataFrame =
+    singleVerdicts(counts).filter(col("w").isNotNull).drop("variant")
 
   /** The class an UNSEEN token votes for: argmax of the pure
     * smoothing score `1·10⁹ div (tot_c + |V|)` — i.e. the class with
-    * the smallest training mass, ties → smallest label. One row. */
-  def defaultVerdict(counts: DataFrame): DataFrame = {
-    val t = tagged(counts)
-    defaultsForVariants(labelConsts(t, presentAgg(t))).drop("variant")
-  }
+    * the smallest training mass, ties → smallest label. One row, none
+    * for empty counts. */
+  def defaultVerdict(counts: DataFrame): DataFrame =
+    singleVerdicts(counts).filter(col("w").isNull)
+      .select(col("label_pred").as("label_dflt"))
 
-  /** The corpus-side term-frequency frame `(doc_id, w, tf)` predict
-    * scores against — public so a card comparing several trained
-    * variants on the SAME eval slice (q218) tokenizes that slice
-    * once, persists this frame, and shares it across variants instead
-    * of re-exploding the corpus per variant. */
+  /** The eval slice projected to `(doc_id, __t)` and keyed on
+    * `doc_id` (scale-guarded): every aggregate in the scoring pipeline
+    * above it is doc-keyed — the vote sum (doc_id, lab) and the
+    * majority (doc_id), and tf (doc_id, w) for [[termFrequencies]] —
+    * and HashPartitioning(doc_id) satisfies all of them, so this ONE
+    * keyed exchange replaces them all (guide §2.4). It holds because
+    * the winner table joins as a broadcast, which keeps the stream
+    * side's partitioning.
+    * `Spread.byKey` sees no files under a persisted frame and is a
+    * no-op there: a caller that persists its eval slice keys it
+    * BEFORE the persist (q308's `labelerRatings`), and the cached scan
+    * then reports the same partitioning. On multi-file production
+    * scans it is a no-op as well and AQE keeps byte-based sizing. */
+  private def keyedText(docs: DataFrame, idCol: String, textCol: String)
+      : DataFrame =
+    Spread.byKey(docs.select(col(graft.Names.quoted(idCol)).as("doc_id"),
+      col(graft.Names.quoted(textCol)).as("__t")), col("doc_id"))
+
+  private def tokens(keyed: DataFrame): DataFrame =
+    keyed.select(col("doc_id"),
+      explode(TextAnalysis.tokens(col("__t"))).as("w"))
+
+  /** The corpus-side term-frequency frame `(doc_id, w, tf)` that
+    * [[predictFromTf]] and [[predictVariantsFromTf]] score — for a
+    * card that scores several trained variants on the SAME eval slice
+    * and tokenizes it once. */
   def termFrequencies(docs: DataFrame, idCol: String, textCol: String)
-      : DataFrame = {
-    val qid = graft.Names.quoted(idCol)
-    val qt = graft.Names.quoted(textCol)
-    // Pre-partition the eval slice by doc_id (scale-guarded, r20):
-    // every aggregate in the verdict pipeline above this frame is
-    // doc-keyed — tf (doc_id, w), the vote sum (doc_id, lab), the
-    // majority (doc_id) — and HashPartitioning(doc_id) satisfies the
-    // clustered distribution of ALL of them, so the ONE keyed
-    // exchange here replaces three stacked exchanges (guide §2.4:
-    // operations keyed the same way share one exchange). The saving
-    // relies on the winner table joining in as a broadcast, which
-    // preserves partitioning; that is the planner's auto-broadcast
-    // choice for a vocab-sized table, not a hint, so a vocab above
-    // the threshold shuffle-joins on w and re-exchanges tf.
-    // Spread.byKey no-ops on multi-file production scans, where the
-    // w-join may be a shuffle join and AQE keeps byte-based sizing.
-    Spread.byKey(docs.select(col(qid).as("doc_id"), col(qt).as("__t")),
-        col("doc_id"))
-      .select(col("doc_id"),
-        explode(TextAnalysis.tokens(col("__t"))).as("w"))
+      : DataFrame =
+    tokens(keyedText(docs, idCol, textCol))
       .groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("tf"))
-  }
 
   /** Score a corpus against a trained counts frame: every token
     * occurrence votes for its type's winner class (unseen types vote
@@ -237,122 +241,114 @@ object NbClassifier {
     * the calibration card (q209) buckets. */
   def predict(docs: DataFrame, counts: DataFrame,
       idCol: String, textCol: String): DataFrame = {
-    val qid = graft.Names.quoted(idCol)
-    predictFromTf(docs.select(col(qid).as("doc_id")),
-      termFrequencies(docs, idCol, textCol), counts)
+    // both the doc universe and the tokens read the one keyed
+    // projection (above a file scan AQE reuses its exchange). Each token
+    // occurrence goes to the vote with tf 1: the vote is a sum, so a
+    // (doc, w) pre-aggregate would only add two hash aggregates to the
+    // stage
+    val keyed = keyedText(docs, idCol, textCol)
+    predictFromTf(keyed.select(col("doc_id")),
+      tokens(keyed).withColumn("tf", lit(1L)), counts)
   }
 
   /** [[predict]] over a PRECOMPUTED (doc_id, w, tf) frame — the
     * share-one-tokenize entry point for multi-variant cards. `docIds`
-    * supplies the full eval universe (one `doc_id` column) so
-    * token-free documents still land in the output. */
+    * supplies the eval universe (one `doc_id` column, one row per
+    * doc) so token-free documents still land in the output. With no
+    * trained counts every token votes NULL, so each doc's label
+    * coalesces to [[NoEvidenceLabel]] while `n_tokens` stays real and
+    * `share_ppm` is 1000000 — the oracle's NULL-scalar-subquery
+    * spelling (ADVICE r13). */
   def predictFromTf(docIds: DataFrame, tf: DataFrame,
-      counts: DataFrame): DataFrame = {
-    // The smoothing default must stay a ONE-row frame even when the
-    // counts frame is empty: a bare crossJoin with an empty
-    // defaultVerdict would collapse the votes frame to zero rows and
-    // silently mark every doc no-evidence (ADVICE r13). A left join
-    // from a literal single row instead carries a NULL default, so
-    // with no trained counts every token votes NULL, each doc groups
-    // into one NULL-label majority, and the output matches the
-    // oracle's NULL-scalar-subquery spelling exactly: label_pred
-    // coalesces to (none) but n_tokens stays real and share_ppm is
-    // 1000000 — the trap the advisor flagged, closed in-plan with no
-    // eager driver action.
-    // ONE consts/present build feeds BOTH the winner table and the
-    // unseen-token default (r20 — the old spelling built labelConsts
-    // twice, once under tokenVerdicts and once under defaultVerdict,
-    // re-running the vocab-sized aggregates per consumer unless
-    // exchange reuse happened to fire)
-    val t = tagged(counts)
-    val present = presentAgg(t)
-    val consts = labelConsts(t, present)
-    val dflt = docIds.sparkSession.range(1).toDF("__one")
-      .join(broadcast(defaultsForVariants(consts).drop("variant")
-        .withColumn("__one", lit(0L))),
-        Seq("__one"), "left")
-      .select(col("label_dflt"))
-    val votes = tf.join(verdictsFromPresent(present, consts)
-        .drop("variant"), Seq("w"), "left")
-      .crossJoin(broadcast(dflt))
-      .withColumn("lab", coalesce(col("label_pred"), col("label_dflt")))
-      .groupBy(col("doc_id"), col("lab"))
-      .agg(sum(col("tf")).as("votes"))
-    // the doc total AND the majority come out of one doc_id hash
-    // aggregate (min_by over the (-votes, lab) struct = exactly the
-    // (votes desc, lab asc) tie-break) — no sort, no window stage
-    val pred = votes
-      .groupBy(col("doc_id"))
-      .agg(sum(col("votes")).cast("bigint").as("__nt"),
-        min_by(struct(col("lab").as("l"), col("votes").as("v")),
-          struct((col("votes") * -1L).as("nv"), col("lab"))).as("__w"))
-      .select(col("doc_id"), col("__w.l").as("__lab"),
-        col("__nt"), col("__w.v").cast("bigint").as("__tv"))
-    docIds.select(col("doc_id"))
-      .join(pred, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("__lab"), lit(NoEvidenceLabel)).as("label_pred"),
-        coalesce(col("__nt"), lit(0L)).as("n_tokens"),
-        coalesce(expr("cast(cast(__tv as decimal(38,0)) * 1000000 " +
-          "div greatest(__nt, 1L) as bigint)"), lit(0L)).as("share_ppm"))
-  }
+      counts: DataFrame): DataFrame =
+    score(docIds.select(lit("").as("variant"), col("doc_id")),
+      tf.select(lit("").as("variant"), col("doc_id"), col("w"), col("tf")),
+      singleVerdicts(counts)).drop("variant")
 
   /** [[predictFromTf]] for SEVERAL trained variants in ONE corpus-side
     * pass — the multi-variant-card shape (q218), where scoring k
-    * variants must cost one tf join, not k: the per-variant winner
-    * tables are tagged and unioned (a vocab-sized frame), each tf row
-    * fans out over the tiny broadcast (variant, default) frame, the
-    * union is joined ONCE on (variant, w), and every majority comes
-    * out of one (variant, doc_id) shuffle. Per variant the output is
-    * row-for-row [[predictFromTf]] (spec-pinned): same votes, same
-    * tie-break, same no-evidence handling — `variant` is just a tag
-    * column riding every key. */
+    * variants must cost one tf join, not k: the counts frames are
+    * tagged and unioned, one verdict pipeline builds every variant's
+    * winner table (a vocab-sized frame), each tf row fans out over
+    * the tiny broadcast variant list, and every majority comes out
+    * of the same (variant, doc_id) aggregates. Per variant the output
+    * is row-for-row [[predictFromTf]] (spec-pinned) — `variant` is
+    * just a tag column riding every key. No persist here: callers
+    * hand in already-persisted counts. */
   def predictVariantsFromTf(docIds: DataFrame, tf: DataFrame,
       variants: Seq[(String, DataFrame)]): DataFrame = {
     require(variants.nonEmpty, "need at least one trained variant")
     val s = docIds.sparkSession
-    // tag + union the trained counts, then run the verdict pipeline
-    // ONCE over the tagged frame ([[presentAgg]] feeding
-    // [[verdictsFromPresent]]) — k
-    // variants in one totals aggregate, one winner aggregate, zero
-    // extra stages. No persist here: callers hand in already-persisted
-    // counts, and a union over cached vocab-sized frames is cheaper to
-    // recompute than to materialize again
+    import s.implicits._
+    val names = variants.map(_._1).toDF("variant")
     val countsAll =
       variants.map { case (name, counts) =>
         counts.select(lit(name).as("variant"), col("label"), col("w"),
           col("cnt").cast("bigint").as("cnt"))
       }.reduce(_.unionByName(_))
-    val presentAll = presentAgg(countsAll)
-    val consts = labelConsts(countsAll, presentAll)
-    val verdictsAll = verdictsFromPresent(presentAll, consts)
-    // one row per variant, NULL default when its counts are empty —
-    // the same NULL-carrying left join predictFromTf's literal row
-    // provides, spelled over the variant-name local relation
-    import s.implicits._
-    val names = variants.map(_._1).toDF("variant")
-    val dflts = names.join(defaultsForVariants(consts),
-      Seq("variant"), "left")
-    val votes = tf.crossJoin(broadcast(dflts))
-      .join(verdictsAll, Seq("variant", "w"), "left")
-      .withColumn("lab", coalesce(col("label_pred"), col("label_dflt")))
-      .groupBy(col("variant"), col("doc_id"), col("lab"))
-      .agg(sum(col("tf")).as("votes"))
-    val pred = votes
+    score(docIds.select(col("doc_id")).crossJoin(broadcast(names)),
+      tf.select(col("doc_id"), col("w"), col("tf"))
+        .crossJoin(broadcast(names)),
+      verdicts(countsAll, names))
+  }
+
+  /** The vote: `(variant, doc_id, label_pred, n_tokens, share_ppm)`
+    * for every `(variant, doc_id)` in `docIds`.
+    *
+    * Each doc adds one probe row with a NULL token and tf 0, which
+    * the null-safe join matches to its variant's default row; every
+    * other token matches its type's verdict or nothing (unseen). So
+    * the (doc, label) vote sum sees the default as the sentinel's
+    * label, unseen tokens as the NULL label, and the doc fold adds
+    * the NULL votes to the default's — exactly `coalesce(verdict,
+    * default)` per token, with no second consumer of the verdict
+    * table. With no default (empty counts) the NULL votes stand as
+    * their own class. The probe rows also carry the doc universe, so
+    * no join back to `docIds` is needed: a doc with zero votes has no
+    * evidence. Winner: most votes, ties → smallest label (the oracle's
+    * `ORDER BY votes DESC, lab`). */
+  private def score(docIds: DataFrame, tf: DataFrame,
+      verdictTable: DataFrame): DataFrame = {
+    val probe = tf.unionByName(docIds.select(col("variant"), col("doc_id"),
+      lit(null).cast("string").as("w"), lit(0L).as("tf")))
+    val table = verdictTable.select(col("variant").as("__vv"),
+      col("w").as("__vw"), col("label_pred"))
+    val g = col("__g")
+    val dflt = aggregate(filter(g, e => e("s")), lit(null).cast("string"),
+      (_, e) => e("l"))
+    val unseen = aggregate(filter(g, e => e("l").isNull), lit(0L),
+      (a, e) => a + e("v"))
+    val total = aggregate(g, lit(0L), (a, e) => a + e("v"))
+    val noWinner = struct(lit(null).cast("string").as("l"), lit(-1L).as("v"))
+    probe
+      .join(broadcast(table), col("variant") === col("__vv") &&
+        col("w") <=> col("__vw"), "left")
+      .groupBy(col("variant"), col("doc_id"), col("label_pred"))
+      .agg(sum(col("tf")).as("v"), max(col("w").isNull).as("s"))
       .groupBy(col("variant"), col("doc_id"))
-      .agg(sum(col("votes")).cast("bigint").as("__nt"),
-        min_by(struct(col("lab").as("l"), col("votes").as("v")),
-          struct((col("votes") * -1L).as("nv"), col("lab"))).as("__w"))
-      .select(col("variant"), col("doc_id"), col("__w.l").as("__lab"),
-        col("__nt"), col("__w.v").cast("bigint").as("__tv"))
-    docIds.select(col("doc_id"))
-      .crossJoin(broadcast(names))
-      .join(pred, Seq("variant", "doc_id"), "left")
+      .agg(collect_list(struct(col("label_pred").as("l"), col("v"),
+        col("s"))).as("__g"))
+      // tf rows of a doc outside docIds carry no sentinel
+      .filter(exists(g, e => e("s")))
+      .select(col("variant"), col("doc_id"), g, dflt.as("__d"),
+        unseen.as("__u"), total.as("__n"))
+      .select(col("variant"), col("doc_id"), col("__n"),
+        aggregate(
+          transform(filter(g, e => e("l").isNotNull || col("__d").isNull),
+            e => struct(e("l").as("l"), (e("v") +
+              when(e("l") === col("__d"), col("__u")).otherwise(0L)).as("v"))),
+          noWinner,
+          (acc, e) => when(e("v") > acc("v") ||
+            (e("v") === acc("v") && e("l") < acc("l")), e).otherwise(acc))
+          .as("__w"))
       .select(col("variant"), col("doc_id"),
-        coalesce(col("__lab"), lit(NoEvidenceLabel)).as("label_pred"),
-        coalesce(col("__nt"), lit(0L)).as("n_tokens"),
-        coalesce(expr("cast(cast(__tv as decimal(38,0)) * 1000000 " +
-          "div greatest(__nt, 1L) as bigint)"), lit(0L)).as("share_ppm"))
+        when(col("__n") === 0L, lit(NoEvidenceLabel))
+          .otherwise(coalesce(col("__w.l"), lit(NoEvidenceLabel)))
+          .as("label_pred"),
+        col("__n").cast("bigint").as("n_tokens"),
+        when(col("__n") === 0L, lit(0L)).otherwise(
+          expr("cast(cast(__w.v as decimal(38,0)) * 1000000 div __n " +
+            "as bigint)")).as("share_ppm"))
   }
 
   /** The evaluation card: confusion matrix of a labeled eval slice

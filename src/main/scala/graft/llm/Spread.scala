@@ -39,9 +39,10 @@ import org.apache.spark.sql.DataFrame
   * outweigh the extra cores. The width is now derived from the INPUT —
   * one partition per [[SmallBytesPerPartition]] of scan bytes, floored
   * at [[MinSmallWidth]] (the parallelism floor the guard exists to
-  * provide, and the operating point both boxes measured fastest),
-  * capped at the session's cores — so a larger-but-still-small input
-  * widens with its size instead of with the box.
+  * provide, and the operating point both boxes measured fastest) and
+  * at the scan's file count, capped at the session's cores — so a
+  * larger-but-still-small input widens with its size instead of with
+  * the box, and never narrows below the scan's own parallelism.
   */
 object Spread {
   /** Below this per-core input share the scan is scheduling-bound and
@@ -84,11 +85,19 @@ object Spread {
         }.sum
       } catch { case _: Throwable => Long.MaxValue }
     if (bytes / target >= MinBytesPerCore) None
-    else {
-      val w = math.max(MinSmallWidth.toLong, bytes / SmallBytesPerPartition)
-      Some(math.min(target.toLong, w).toInt)
-    }
+    else Some(width(files.length, bytes, target))
   }
+
+  /** The repartition width for a small scan of `nFiles` files and
+    * `bytes` input bytes on `target` cores: one partition per
+    * [[SmallBytesPerPartition]], floored at [[MinSmallWidth]] and at
+    * the file count — the scan already runs one task per file, and a
+    * repartition narrower than that would serialize what the scan had
+    * spread (20 small files must not shrink to 8 tasks) — and capped
+    * at the cores. */
+  private[llm] def width(nFiles: Int, bytes: Long, target: Int): Int =
+    math.min(target.toLong, Seq(MinSmallWidth.toLong, nFiles.toLong,
+      bytes / SmallBytesPerPartition).max).toInt
 
   def apply(df: DataFrame): DataFrame =
     smallScanWidth(df) match {

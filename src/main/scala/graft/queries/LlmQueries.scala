@@ -1861,8 +1861,13 @@ object LlmQueries {
     val counts = graft.llm.Caches.persistTracked(
       graft.llm.NbClassifier.train(
         split.filter(col("split") === "train"), "text", "lang"))
-    val test = graft.llm.Caches.persistTracked(
-      split.filter(col("split") === "test"))
+    // keyed on doc_id BEFORE the persist: Spread.byKey sees the file
+    // scan here and sees none under the cache, and the cached scan keeps
+    // the HashPartitioning(doc_id) — so predict's vote and majority
+    // aggregates, the rater union and the cards' per-item aggregates
+    // above it all run without another exchange
+    val test = graft.llm.Caches.persistTracked(graft.llm.Spread.byKey(
+      split.filter(col("split") === "test"), col("doc_id")))
     // the ratings frame feeds self-joins (kappaMatrix) and multi-branch
     // aggregates downstream — persist the (test-slice × 3 raters) frame
     // so the NB predict chain is priced once per card, not per branch

@@ -32,3 +32,66 @@ object PlanNodes {
       case n => Seq(n)
     }
 }
+
+/** Exchanges a finished AQE plan ran more than once. AQE reuses an
+  * exchange only when its canonical form matches one it already
+  * built, and the canonical form above a persisted frame carries the
+  * id of the fresh `TableCacheQueryStageExec` each cache scan gets —
+  * so two consumers of one frame derived from a cache run its
+  * exchange chain twice and print no `ReusedExchange`. This walks the
+  * final plan through query stages, subqueries and the cached
+  * sub-plans, rewrites every query stage back to the exchange or scan
+  * it wraps (a cache stage becomes its scan), and groups exchanges by
+  * the canonical form of that rewrite. Call it after the frame has
+  * run: before execution AQE has built no stages. */
+object DuplicateExchanges {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+    AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  import org.apache.spark.sql.execution.exchange.Exchange
+
+  /** Every exchange the plan ran, inside cached sub-plans too. A
+    * cached sub-plan is walked once however many scans read it: it
+    * runs once, when the cache fills. */
+  def exchanges(p: SparkPlan): Seq[Exchange] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def walk(n: SparkPlan): Seq[Exchange] = {
+      val inner = n match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case m: InMemoryTableScanExec =>
+          if (seen.add(m.relation.cacheBuilder)) Seq(m.relation.cachedPlan)
+          else Nil
+        case o => o.children ++ o.subqueries
+      }
+      (n match {
+        case e: Exchange => Seq(e)
+        case _ => Nil
+      }) ++ inner.flatMap(walk)
+    }
+    walk(p)
+  }
+
+  /** The exchange subtree with every stage, AQE wrapper and shuffle
+    * read replaced by what it wraps — what the exchange would compare
+    * as if AQE had not cut the plan into stages. */
+  private def unstaged(p: SparkPlan): SparkPlan = p.transformUp {
+    case s: QueryStageExec => unstaged(s.plan)
+    case a: AdaptiveSparkPlanExec => unstaged(a.executedPlan)
+    case r: AQEShuffleReadExec => r.child
+  }
+
+  /** Groups of two or more exchanges with equal canonical forms, as
+    * (count, the top of the exchange's unstaged plan). Empty when
+    * nothing ran twice. */
+  def apply(df: DataFrame): Seq[(Int, String)] =
+    exchanges(df.queryExecution.executedPlan)
+      .groupBy(e => unstaged(e).canonicalized)
+      .values.filter(_.size > 1).toSeq
+      .map(g => (g.size,
+        unstaged(g.head).treeString.linesIterator.take(8).mkString("\n")))
+      .sortBy(-_._1)
+}

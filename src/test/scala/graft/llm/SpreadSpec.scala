@@ -66,6 +66,37 @@ class SpreadSpec extends AnyFunSuite with SparkTestSession {
     assert(Spread.smallScanWidth(base).contains(w.toInt))
   }
 
+  test("width floors at the scan's file count: many small files keep their tasks") {
+    // 20 tiny files on 32 cores: the scan already runs 20 tasks, the
+    // repartition must not narrow it to the 8-wide floor
+    assert(Spread.width(20, 1000L, 32) == 20)
+    assert(Spread.width(3, 1000L, 32) == Spread.MinSmallWidth)
+    assert(Spread.width(20, 1000L, 16) == 16, "the core cap still binds")
+    assert(Spread.width(2, 30L * Spread.SmallBytesPerPartition, 32) == 30)
+  }
+
+  test("Spread on a multi-file scan: file-count-aware width, same rows") {
+    val tmp = java.nio.file.Files.createTempDirectory("spread-multi").toString
+    graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      .repartition(3).write.mode("overwrite").parquet(tmp)
+    val base = spark.read.parquet(tmp)
+    val target = spark.sparkContext.defaultParallelism
+    assume(target > 3, "needs more cores than files")
+    val files = base.inputFiles
+    assert(files.length == 3)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val bytes = files.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(conf).getFileStatus(p).getLen
+    }.sum
+    assert(Spread.smallScanWidth(base).contains(Spread.width(3, bytes, target)))
+    assert(Spread(base).rdd.getNumPartitions == Spread.width(3, bytes, target))
+    def lens(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("doc_id"), size(TextAnalysis.tokens(col("text"))).as("n"))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
+    assert(lens(Spread(base)) == lens(base))
+  }
+
   test("Spread.byKey pre-partitions by the join key without stacking a second exchange") {
     val base = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
