@@ -19,9 +19,63 @@ object BenchProtocol {
     * otherwise see. deadlineSec <= 0 disables. */
   def expired(jvmStartMs: Long, nowMs: Long, deadlineSec: Long): Boolean =
     deadlineSec > 0 && (nowMs - jvmStartMs) / 1000L >= deadlineSec
+
+  /** One recorded iteration of one query: wall, process CPU, GC and
+    * 1-min load (None/-1 where the JVM or box cannot tell), hypervisor
+    * steal in ppm of the run's jiffies, steal retries spent, and the
+    * classes codegen compiled in this JVM during the run (driver and,
+    * on a local master, executor compiles). */
+  final case class Iter(wall: Double, cpu: Option[Double], gc: Long,
+      compiles: Long, load: Option[Double], steal: Option[Long],
+      retries: Int) {
+    // unknown steal (no procfs) counts as clean: it cannot be
+    // adjudicated and must not burn the retry budget
+    def clean(stealMaxPpm: Long): Boolean = steal.forall(_ <= stealMaxPpm)
+  }
+
+  // locale-pinned decimal rendering: the f"" interpolator formats
+  // with the JVM default locale, and a comma-decimal locale would
+  // turn 4.123 into "4,123" — structurally-valid, semantically
+  // garbled JSON in the committed bench record
+  def dec(v: Double, places: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${places}f", Double.box(v))
+
+  /** The recorded per-query time: the min over ALL iterations. */
+  def minWall(v: Seq[Iter]): Double = recordedMin(v.map(_.wall))
+
+  /** The detail record for `results` (query -> its iterations, in run
+    * order). `flagged` names the queries that never saw a clean steal
+    * window; `env` is the rendered env object. Per-query maps hold one
+    * entry per iteration; `queries`/`value` hold the recorded min. */
+  def record(results: Seq[(String, Seq[Iter])], flagged: Seq[String],
+      env: String, sf: String): String = {
+    def fmtMap(f: Iter => String): String = results.map { case (k, v) =>
+      s"\"" + k + "\":" + v.map(f).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + minWall(v) }
+      .mkString("{", ",", "}")
+    // every iteration's time, not just the min: a one-off slow
+    // iteration (GC pause, box noise) then shows up as [4.1, 0.4]
+    // instead of masquerading as — or hiding — a plan regression
+    val iters = fmtMap(i => dec(i.wall, 3))
+    val cpus = fmtMap(_.cpu.map(dec(_, 3)).getOrElse("null"))
+    val gcs = fmtMap(_.gc.toString)
+    // a warm iteration should compile nothing; a non-zero entry after
+    // the first means codegen work rode the timed wall
+    val compiles = fmtMap(_.compiles.toString)
+    val loads = fmtMap(_.load.map(dec(_, 2)).getOrElse("null"))
+    val steals = fmtMap(_.steal.map(_.toString).getOrElse("null"))
+    val retries = fmtMap(_.retries.toString)
+    val flaggedJson = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = if (results.nonEmpty) results.map(r => minWall(r._2)).sum
+                else 0.0
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$iters,"cpu_sec":$cpus,"gc_ms":$gcs,"codegen_compiles":$compiles,"load1m":$loads,"steal_ppm":$steals,"steal_retries":$retries,"steal_flagged":$flaggedJson,"env":$env,"sf":"$sf"}"""
+  }
 }
 
 object Bench {
+  import BenchProtocol.{Iter, dec, minWall}
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // three iterations: r7's recorded bench landed on a noisy box and
@@ -119,12 +173,9 @@ object Bench {
       while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) s += t }
       s
     }
-    case class Iter(wall: Double, cpu: Option[Double], gc: Long,
-        load: Option[Double], steal: Option[Long], retries: Int) {
-      // unknown steal (no procfs) counts as clean: it cannot be
-      // adjudicated and must not burn the retry budget
-      def clean: Boolean = steal.forall(_ <= stealMaxPpm)
-    }
+    def compilesSoFar: Long =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
     /** One recorded iteration of `fn`: timed runs repeat while the
       * steal window is dirty (bounded in retries AND in seconds),
       * keeping the least-stolen attempt. Past the global deadline the
@@ -144,6 +195,7 @@ object Bench {
           val st0 = procStat()
           val gc0 = gcMs
           val cpu0 = procCpuNanos
+          val cc0 = compilesSoFar
           val t0 = System.nanoTime()
           // a failing query must fail the BENCH, not score as the run's
           // fastest entry — swallowing into a -1 sentinel once masked
@@ -158,29 +210,18 @@ object Bench {
             yield (s1 - s0) * 1000000L / math.max(t1s - t0s, 1L)
           val it = Iter(wall,
             for (c0 <- cpu0; c1 <- procCpuNanos) yield (c1 - c0) / 1e9,
-            gcMs - gc0, load0, stealPpm, attempt)
+            gcMs - gc0, compilesSoFar - cc0, load0, stealPpm, attempt)
           // keep the least-stolen attempt so an always-dirty box still
           // records its best-available measurement (flagged below)
           if (best.forall(b => it.steal.getOrElse(0L) <
               b.steal.getOrElse(0L)) || best.isEmpty) best = Some(it)
-          if (it.clean || attempt >= stealRetries || stealBudgetSec <= 0 ||
-              deadlineTripped)
+          if (it.clean(stealMaxPpm) || attempt >= stealRetries ||
+              stealBudgetSec <= 0 || deadlineTripped)
             done = true
           else { attempt += 1; stealBudgetSec -= wall }
         }
         best.get
     }
-    // locale-pinned decimal rendering: the f"" interpolator formats
-    // with the JVM default locale, and a comma-decimal locale would
-    // turn 4.123 into "4,123" — structurally-valid, semantically
-    // garbled JSON in the committed bench record
-    def dec(v: Double, places: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${places}f", Double.box(v))
-    // the recorded per-query time is the min over ALL iterations (see
-    // BenchProtocol.recordedMin); `steal_flagged` still names every
-    // query that never saw a clean window
-    def minWall(v: Seq[Iter]): Double =
-      BenchProtocol.recordedMin(v.map(_.wall))
     val detailPath = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_DETAIL", "/root/repo/BENCH_DETAIL.json")
     /** Render the full record for whatever has completed so far and
@@ -191,25 +232,9 @@ object Bench {
       * truncated JSON behind. */
     def writeRecord(results: Seq[(String, Seq[Iter])],
         degraded: Seq[String], complete: Boolean): String = {
-      def fmtMap(f: Iter => String): String = results.map { case (k, v) =>
-        s"\"" + k + "\":" + v.map(f).mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val qs = results.map { case (k, v) => s"\"" + k + "\":" + minWall(v) }
-        .mkString("{", ",", "}")
-      // every iteration's time, not just the min: a one-off slow
-      // iteration (GC pause, box noise) then shows up as [4.1, 0.4]
-      // instead of masquerading as — or hiding — a plan regression
-      val iters = fmtMap(i => dec(i.wall, 3))
-      val cpus = fmtMap(_.cpu.map(dec(_, 3)).getOrElse("null"))
-      val gcs = fmtMap(_.gc.toString)
-      val loads = fmtMap(_.load.map(dec(_, 2)).getOrElse("null"))
-      val steals = fmtMap(_.steal.map(_.toString).getOrElse("null"))
-      val retries = fmtMap(_.retries.toString)
       val flagged = results.collect {
-        case (k, v) if !v.exists(_.clean) => "\"" + k + "\""
-      }.mkString("[", ",", "]")
-      val total = if (results.nonEmpty) results.map(r => minWall(r._2)).sum
-                  else 0.0
+        case (k, v) if !v.exists(_.clean(stealMaxPpm)) => k
+      }
       val degradedJson =
         degraded.map("\"" + _ + "\"").mkString("[", ",", "]")
       val env = s"""{"processors":${Runtime.getRuntime.availableProcessors}""" +
@@ -220,8 +245,7 @@ object Bench {
         s""","deadline_sec":$deadlineSec""" +
         s""","deadline_degraded":$degradedJson""" +
         s""","complete":$complete}"""
-      val full =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$iters,"cpu_sec":$cpus,"gc_ms":$gcs,"load1m":$loads,"steal_ppm":$steals,"steal_retries":$retries,"steal_flagged":$flagged,"env":$env,"sf":"$sfDir"}"""
+      val full = BenchProtocol.record(results, flagged, env, sfDir)
       try {
         val tmp = java.nio.file.Paths.get(detailPath + ".tmp")
         java.nio.file.Files.write(tmp, (full + "\n").getBytes("UTF-8"))
@@ -246,7 +270,8 @@ object Bench {
     // run — give each one more recorded iteration while the budget and
     // deadline last, BEFORE flagging it
     acc = acc.map { case (name, iters) =>
-      if (iters.exists(_.clean) || stealBudgetSec <= 0 || deadlineTripped)
+      if (iters.exists(_.clean(stealMaxPpm)) || stealBudgetSec <= 0 ||
+          deadlineTripped)
         name -> iters
       else name -> {
         val extra = timedIter(name, SparkEntry.queries(name))

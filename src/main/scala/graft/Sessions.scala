@@ -14,6 +14,21 @@ import org.apache.spark.sql.SparkSession
   *    DuckDB oracle.
   *  - AQE on (Spark default) handles runtime join-strategy selection and
   *    skew splitting — the scale path relies on it instead of hints.
+  *  - `spark.sql.artifact.isolation.enabled=false`: Spark's
+  *    `CacheManager` fills every persisted frame in a cloned session,
+  *    and each clone has a fresh session UUID. With isolation on (the
+  *    default) the executor builds a new `ExecutorClassLoader` per
+  *    UUID, and `CodeGenerator` caches compiled classes per
+  *    `(class loader, code)` — so every cache fill recompiled all of
+  *    its whole-stage code and leaked one more loader. The engine adds
+  *    no session jars or artifacts, so one shared loader loses nothing.
+  *  - `spark.sql.codegen.cache.maxEntries=2000`: the default of 100 is
+  *    below the working set of one q172 + q308 pass at sf0.1 (147
+  *    classes across the driver and executor loaders: 59 + 88), and an
+  *    LRU cycling through more than its capacity never hits. A static
+  *    conf: the cache is sized once per JVM, when `CodeGenerator` is
+  *    first touched, so it holds only if no codegen runs before the
+  *    first session is built. (DESIGN.md §6.)
   */
 object Sessions {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -27,6 +42,14 @@ object Sessions {
       // the same line a cluster deploy puts in spark-defaults.conf
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // one executor class loader for every session, cache-fill clones
+      // included: per-session loaders defeat the codegen cache, which
+      // is keyed on (class loader, code) — see the scaladoc above
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // static conf: over 10× the codegen working set measured for a
+      // q172 + q308 pass (147 entries), so a warm card run compiles
+      // nothing
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** local[$cpus] session sized from SPARK_GRAFT_CPUS (driver contract). */
   def local(): SparkSession = {

@@ -240,7 +240,10 @@ object SimilarityQueries {
     // coalesces the distinct's output by BYTES to ~1 partition, which
     // serialized the whole inter_count verify into one 5 s task
     // (measured r19); the per-row cost here is CPU, not bytes. Spread
-    // is a structural no-op on a multi-file production corpus.
+    // sizes its width from the input files' bytes, floored at the file
+    // count, so it finds no files under `corpusSets`' persist and does
+    // nothing here: the verify runs at AQE's byte-coalesced width
+    // again.
     val truth = graft.llm.Caches.persistTracked(
       arrSets.select(col("doc_id"), col("s").as("sa"))
         .crossJoin(graft.llm.Spread(

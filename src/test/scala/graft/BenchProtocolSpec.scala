@@ -51,4 +51,29 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(Verify.benchPrior("/nonexistent/path.json") == Map.empty)
     java.nio.file.Files.delete(tmp)
   }
+
+  test("the record carries per-iteration codegen_compiles next to gc_ms") {
+    import BenchProtocol.Iter
+    val rec = BenchProtocol.record(
+      Seq("q1" -> Seq(Iter(2.0, Some(3.5), 40L, 17L, Some(1.25), Some(0L), 0),
+                      Iter(1.5, None, 0L, 0L, None, None, 1)),
+          "q2" -> Seq(Iter(0.25, Some(0.5), 3L, 0L, Some(0.5), Some(30000L), 2))),
+      Seq("q2"), "{}", "sf")
+    assert(rec ==
+      "{\"metric\":\"total\",\"value\":1.75,\"unit\":\"sec\"," +
+      "\"queries\":{\"q1\":1.5,\"q2\":0.25}," +
+      "\"times\":{\"q1\":[2.000,1.500],\"q2\":[0.250]}," +
+      "\"cpu_sec\":{\"q1\":[3.500,null],\"q2\":[0.500]}," +
+      "\"gc_ms\":{\"q1\":[40,0],\"q2\":[3]}," +
+      "\"codegen_compiles\":{\"q1\":[17,0],\"q2\":[0]}," +
+      "\"load1m\":{\"q1\":[1.25,null],\"q2\":[0.50]}," +
+      "\"steal_ppm\":{\"q1\":[0,null],\"q2\":[30000]}," +
+      "\"steal_retries\":{\"q1\":[0,1],\"q2\":[2]}," +
+      "\"steal_flagged\":[\"q2\"],\"env\":{},\"sf\":\"sf\"}")
+    // the prior Verify orders by still reads the new record
+    val tmp = java.nio.file.Files.createTempFile("bench_detail", ".json")
+    java.nio.file.Files.writeString(tmp, rec + "\n")
+    assert(Verify.benchPrior(tmp.toString) == Map("q1" -> 1.5, "q2" -> 0.25))
+    java.nio.file.Files.delete(tmp)
+  }
 }

@@ -56,12 +56,11 @@ class StageBudgetSpec extends AnyFunSuite with SparkTestSession {
     * every frame above a persisted frame one consumer (AQE reuses no
     * exchange there; DESIGN.md §6) and q308's eval slice was keyed on
     * doc_id before its persist. Re-measured warm at sf0.001, same
-    * headroom: q172=23, q308=20, q309=30, q316=28, q317=30. (q87=19,
-    * q209=14, q288=23, q313=18 and q318=18 fell too; their budgets
-    * are still the older, looser ones.) */
+    * headroom: q172=23, q308=20, q309=30, q316=28, q317=30, q87=19,
+    * q209=14, q288=23, q313=18, q318=18. */
   private val budgets = Seq(
     "q134_assoc_rules" -> (20, 20),
-    "q87_pagerank" -> (36, 36),
+    "q87_pagerank" -> (25, 25),
     "q100_triangles" -> (32, 32),
     "q170_hits" -> (60, 60),
     "q172_seeded_pagerank" -> (30, 30),
@@ -71,7 +70,7 @@ class StageBudgetSpec extends AnyFunSuite with SparkTestSession {
     // q295=30) + ~30% headroom
     "q124_itemsets" -> (17, 17),
     "q125_ivf_balance" -> (16, 16),
-    "q209_nb_calibration" -> (29, 29),
+    "q209_nb_calibration" -> (19, 19),
     "q220_overlap_estimate" -> (38, 38),
     "q295_erase_apply" -> (39, 40),
     // r17: the round's new cards, same discipline (measured warm at
@@ -86,24 +85,26 @@ class StageBudgetSpec extends AnyFunSuite with SparkTestSession {
     // r19: +2 jobs from the deliberate labelerRatings persist (the
     // cache-fill materialization now shows as its own jobs; the
     // persist removed the NB-chain replay per consumer — measured net
-    // win). Re-measured warm at sf0.001: 36.
-    "q313_fleiss_monitor" -> (38, 38),
+    // win). Re-measured warm at sf0.001: 36; 18 since the labeler fix.
+    "q313_fleiss_monitor" -> (24, 24),
     // q314 measured warm at sf0.001: 20
     "q314_cap_sweep" -> (26, 26),
     // r17 ask #8: the remaining board-top stragglers (q269's
     // iteration-1 spikes are artifact-read-shaped — a pinned budget
     // keeps scheduling growth from hiding there). Measured warm at
-    // sf0.001: q269 jobs=25/stages=35, q288 35/35 — + ~30% headroom
+    // sf0.001: q269 jobs=25/stages=35, q288 35/35 (23/23 since the
+    // labeler fix) — + ~30% headroom
     "q269_mutual_knn_loaded" -> (33, 46),
-    "q288_paired_bootstrap" -> (46, 46),
+    "q288_paired_bootstrap" -> (30, 30),
     // r18: the round's new cards, measured warm at sf0.001
     // (q315=13, q316=38, q317=38) + ~30% headroom
     "q315_compact_serve" -> (17, 17),
     "q316_krippendorff_alpha" -> (37, 37),
     "q317_rater_accuracy" -> (39, 39),
     // q318 measured warm at sf0.001: 26; r19 +2 jobs (the q313
-    // rationale — labelerRatings cache-fill jobs), re-measured: 36
-    "q318_alpha_monitor" -> (38, 38))
+    // rationale — labelerRatings cache-fill jobs), re-measured: 36;
+    // 18 since the labeler fix
+    "q318_alpha_monitor" -> (24, 24))
 
   budgets.foreach { case (name, (maxJobs, maxStages)) =>
     test(s"$name stays inside its scheduling budget " +
