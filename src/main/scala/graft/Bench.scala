@@ -22,12 +22,13 @@ object BenchProtocol {
 
   /** One recorded iteration of one query: wall, process CPU, GC and
     * 1-min load (None/-1 where the JVM or box cannot tell), hypervisor
-    * steal in ppm of the run's jiffies, steal retries spent, and the
+    * steal in ppm of the run's jiffies, steal retries spent, the
     * classes codegen compiled in this JVM during the run (driver and,
-    * on a local master, executor compiles). */
+    * on a local master, executor compiles), and the parquet reads that
+    * missed [[Tables]]' schema memo and ran Spark's inference job. */
   final case class Iter(wall: Double, cpu: Option[Double], gc: Long,
-      compiles: Long, load: Option[Double], steal: Option[Long],
-      retries: Int) {
+      compiles: Long, inferences: Long, load: Option[Double],
+      steal: Option[Long], retries: Int) {
     // unknown steal (no procfs) counts as clean: it cannot be
     // adjudicated and must not burn the retry budget
     def clean(stealMaxPpm: Long): Boolean = steal.forall(_ <= stealMaxPpm)
@@ -63,13 +64,16 @@ object BenchProtocol {
     // a warm iteration should compile nothing; a non-zero entry after
     // the first means codegen work rode the timed wall
     val compiles = fmtMap(_.compiles.toString)
+    // likewise for schema inference: a warm iteration reads every
+    // table's schema from the memo
+    val inferences = fmtMap(_.inferences.toString)
     val loads = fmtMap(_.load.map(dec(_, 2)).getOrElse("null"))
     val steals = fmtMap(_.steal.map(_.toString).getOrElse("null"))
     val retries = fmtMap(_.retries.toString)
     val flaggedJson = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(r => minWall(r._2)).sum
                 else 0.0
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$iters,"cpu_sec":$cpus,"gc_ms":$gcs,"codegen_compiles":$compiles,"load1m":$loads,"steal_ppm":$steals,"steal_retries":$retries,"steal_flagged":$flaggedJson,"env":$env,"sf":"$sf"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$iters,"cpu_sec":$cpus,"gc_ms":$gcs,"codegen_compiles":$compiles,"schema_inferences":$inferences,"load1m":$loads,"steal_ppm":$steals,"steal_retries":$retries,"steal_flagged":$flaggedJson,"env":$env,"sf":"$sf"}"""
   }
 }
 
@@ -196,6 +200,7 @@ object Bench {
           val gc0 = gcMs
           val cpu0 = procCpuNanos
           val cc0 = compilesSoFar
+          val si0 = Tables.schemaInferences
           val t0 = System.nanoTime()
           // a failing query must fail the BENCH, not score as the run's
           // fastest entry — swallowing into a -1 sentinel once masked
@@ -210,7 +215,8 @@ object Bench {
             yield (s1 - s0) * 1000000L / math.max(t1s - t0s, 1L)
           val it = Iter(wall,
             for (c0 <- cpu0; c1 <- procCpuNanos) yield (c1 - c0) / 1e9,
-            gcMs - gc0, compilesSoFar - cc0, load0, stealPpm, attempt)
+            gcMs - gc0, compilesSoFar - cc0, Tables.schemaInferences - si0,
+            load0, stealPpm, attempt)
           // keep the least-stolen attempt so an always-dirty box still
           // records its best-available measurement (flagged below)
           if (best.forall(b => it.steal.getOrElse(0L) <

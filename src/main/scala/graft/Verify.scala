@@ -94,8 +94,8 @@ object Verify {
     var skipped = 0
     order.foreach { name =>
       if (expired) skipped += 1
-      else try selected(name)(spark, sfDir).coalesce(1).write
-        .mode("overwrite").parquet(s"$outDir/$name")
+      else try Tables.write(selected(name)(spark, sfDir).coalesce(1),
+        s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

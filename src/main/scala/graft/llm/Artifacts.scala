@@ -34,18 +34,17 @@ object Artifacts {
   def saveBpe(spark: SparkSession, path: String,
       merges: Seq[(String, String, Long)], vocab: DataFrame): Unit = {
     import spark.implicits._
-    merges.zipWithIndex
+    graft.Tables.write(merges.zipWithIndex
       .map { case ((l, r, c), i) => (i.toLong, l, r, c) }
       .toDF("rank", "left", "right", "pair_count")
-      .repartition(1)
-      .write.mode("overwrite").parquet(path + "/merges")
-    vocab.write.mode("overwrite").parquet(path + "/vocab")
+      .repartition(1), path + "/merges")
+    graft.Tables.write(vocab, path + "/vocab")
   }
 
   /** The merge table back in learn order — the exact `merges` input
     * of [[BpeTrainer.encode]]'s pre-trained overload. */
   def loadBpeMerges(spark: SparkSession, path: String): Seq[(String, String, Long)] =
-    spark.read.parquet(path + "/merges")
+    graft.Tables.read(spark, path + "/merges")
       .orderBy(col("rank"))
       .select(col("left"), col("right"), col("pair_count"))
       .collect()
@@ -56,7 +55,7 @@ object Artifacts {
     * `sym`/`sym_id`), ready for the encode overload's broadcast
     * join. */
   def loadBpeVocab(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path + "/vocab")
+    graft.Tables.read(spark, path + "/vocab")
 
   // ---------- IVF coarse codebook ----------
 
@@ -65,17 +64,16 @@ object Artifacts {
   def saveCodebook(spark: SparkSession, path: String,
       codebook: Array[Array[Long]]): Unit = {
     import spark.implicits._
-    codebook.zipWithIndex
+    graft.Tables.write(codebook.zipWithIndex
       .map { case (c, i) => (i, c) }.toSeq
       .toDF("cell_id", "centroid")
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
+      .repartition(1), path)
   }
 
   /** The codebook back, cell order restored — byte-identical input
     * for `cellOfUdf`/`ivfAdcSearch`. */
   def loadCodebook(spark: SparkSession, path: String): Array[Array[Long]] =
-    spark.read.parquet(path)
+    graft.Tables.read(spark, path)
       .orderBy(col("cell_id"))
       .select(col("centroid"))
       .collect()
@@ -88,18 +86,17 @@ object Artifacts {
   def savePqCodebooks(spark: SparkSession, path: String,
       codebooks: Array[Array[Array[Long]]]): Unit = {
     import spark.implicits._
-    (for {
+    graft.Tables.write((for {
       (cb, m) <- codebooks.zipWithIndex
       (centroid, c) <- cb.zipWithIndex
     } yield (m, c, centroid)).toSeq
       .toDF("subspace", "code", "centroid")
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
+      .repartition(1), path)
   }
 
   /** The PQ codebooks back in (subspace, code) order. */
   def loadPqCodebooks(spark: SparkSession, path: String): Array[Array[Array[Long]]] =
-    spark.read.parquet(path)
+    graft.Tables.read(spark, path)
       .orderBy(col("subspace"), col("code"))
       .select(col("subspace"), col("centroid"))
       .collect()
@@ -120,15 +117,14 @@ object Artifacts {
     import spark.implicits._
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    Seq(Tuple1(bos.toByteArray)).toDF("bits")
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
+    graft.Tables.write(Seq(Tuple1(bos.toByteArray)).toDF("bits")
+      .repartition(1), path)
   }
 
   /** The prefilter back — byte-identical input for the pre-built
     * [[Decontaminate.contaminatedBloom]] overload. */
   def loadBloom(spark: SparkSession, path: String): org.apache.spark.util.sketch.BloomFilter = {
-    val rows = spark.read.parquet(path).select(col("bits")).collect()
+    val rows = graft.Tables.read(spark, path).select(col("bits")).collect()
     require(rows.length == 1,
       s"expected exactly one serialized filter at $path, found ${rows.length}")
     org.apache.spark.util.sketch.BloomFilter.readFrom(
@@ -157,10 +153,10 @@ object Artifacts {
     * LSH band index) as a DISTRIBUTED parquet table — partitioned
     * write, no `repartition(1)` funnel, no driver collect on load. */
   def saveIndexFrame(path: String, index: DataFrame): Unit =
-    index.write.mode("overwrite").parquet(path)
+    graft.Tables.write(index, path)
 
   def loadIndexFrame(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.read(spark, path)
 
   // ---------- Chained-artifact compaction ----------
 
@@ -189,12 +185,11 @@ object Artifacts {
     * artifacts. */
   def rootFor(sfDir: String): String = {
     val dir = new java.io.File(sfDir)
-    val sig = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.isFile).sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(s"$sfDir|", ",", "")
-    val h = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val h = graft.Tables.digest(
+      Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(_.isFile).sortBy(_.getName)
+        .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
+        .mkString(s"$sfDir|", ",", ""))
     new java.io.File(
       new java.io.File(sys.props("java.io.tmpdir"), "graft-artifacts"),
       h).toString

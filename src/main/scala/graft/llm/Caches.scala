@@ -96,7 +96,7 @@ object Caches {
     * resurrect a frame bound to the stopped one. */
   private val sessionIds = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, String]())
-  private def sessionId(spark: org.apache.spark.sql.SparkSession): String =
+  private[graft] def sessionId(spark: org.apache.spark.sql.SparkSession): String =
     sessionIds.computeIfAbsent(spark,
       _ => java.util.UUID.randomUUID().toString)
 

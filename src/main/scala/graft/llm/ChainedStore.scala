@@ -163,10 +163,12 @@ object ChainedStore {
     while (!published) {
       // the stat row carries the epoch number, so it is (re)written
       // inside the allocation loop — a lost race re-stamps it
-      Seq((epoch, if (arrive) n else 0L, if (arrive) 0L else n))
-        .toDF("epoch", "batch_rows", "erase_rows")
-        .repartition(1).write.mode("overwrite")
-        .parquet(tmp.resolve("stat").toString)
+      // one row in one local partition: coalesce keeps it one file
+      // without the shuffle job a repartition would add
+      graft.Tables.write(
+        Seq((epoch, if (arrive) n else 0L, if (arrive) 0L else n))
+          .toDF("epoch", "batch_rows", "erase_rows").coalesce(1),
+        tmp.resolve("stat").toString)
       try {
         java.nio.file.Files.move(tmp, epochDir(root, epoch).toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -264,10 +266,9 @@ object ChainedStore {
       val d = epochDir(root, e)
       val arriveDir = new java.io.File(d, family.arrivePayload)
       if (arriveDir.exists())
-        family.foldArrive(img,
-          spark.read.parquet(arriveDir.toString))
+        family.foldArrive(img, graft.Tables.read(spark, arriveDir.toString))
       else
-        family.foldErase(img, spark.read.parquet(
+        family.foldErase(img, graft.Tables.read(spark,
           new java.io.File(d, family.erasePayload).toString))
     }
   }
@@ -287,7 +288,7 @@ object ChainedStore {
       if (live.isEmpty)
         spark.range(0).select(col("id").as("epoch"),
           col("id").as("batch_rows"), col("id").as("erase_rows"))
-      else live.map(e => spark.read.parquet(
+      else live.map(e => graft.Tables.read(spark,
         new java.io.File(epochDir(root, e), "stat").toString))
         .reduce(_ unionByName _)
     // the relative-mass denominators start from the compacted

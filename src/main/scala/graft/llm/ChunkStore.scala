@@ -71,7 +71,7 @@ object ChunkStore {
     ChainedStore.publishEpoch(spark, root, arrive = true, txn) { tmp =>
       Artifacts.saveIndexFrame(tmp + "/" + Family.arrivePayload,
         countsOf(batch, idCol, textCol, divisor))
-      spark.read.parquet(tmp + "/" + Family.arrivePayload).count()
+      graft.Tables.read(spark, tmp + "/" + Family.arrivePayload).count()
     }
   }
 
@@ -87,7 +87,7 @@ object ChunkStore {
     ChainedStore.publishEpoch(spark, root, arrive = false, txn) { tmp =>
       Artifacts.saveIndexFrame(tmp + "/" + Family.erasePayload,
         countsOf(erasedDocs, idCol, textCol, divisor))
-      spark.read.parquet(tmp + "/" + Family.erasePayload)
+      graft.Tables.read(spark, tmp + "/" + Family.erasePayload)
         .join(serve(spark, root).select(col("ck")), Seq("ck"),
           "left_semi").count()
     }

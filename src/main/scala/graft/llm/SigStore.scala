@@ -135,7 +135,7 @@ object SigStore {
       val sets = MinHashLSH.shingleSets(arrivals, idCol, textCol,
         m.shingleN)
       Artifacts.saveIndexFrame(tmp + "/arrive_sets", sets)
-      spark.read.parquet(tmp + "/arrive_sets").count()
+      graft.Tables.read(spark, tmp + "/arrive_sets").count()
     }
   }
 
@@ -150,7 +150,7 @@ object SigStore {
       val ids = eraseIds.select(col("doc_id")).distinct()
       Artifacts.saveIndexFrame(tmp + "/erase_ids", ids)
       val served = serve(spark, root)
-      spark.read.parquet(tmp + "/erase_ids")
+      graft.Tables.read(spark, tmp + "/erase_ids")
         .join(served.sets.select(col("doc_id")), Seq("doc_id"),
           "left_semi").count()
     }

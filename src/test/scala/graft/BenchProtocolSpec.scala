@@ -54,10 +54,11 @@ class BenchProtocolSpec extends AnyFunSuite {
 
   test("the record carries per-iteration codegen_compiles next to gc_ms") {
     import BenchProtocol.Iter
+    // schema_inferences rides next to codegen_compiles
     val rec = BenchProtocol.record(
-      Seq("q1" -> Seq(Iter(2.0, Some(3.5), 40L, 17L, Some(1.25), Some(0L), 0),
-                      Iter(1.5, None, 0L, 0L, None, None, 1)),
-          "q2" -> Seq(Iter(0.25, Some(0.5), 3L, 0L, Some(0.5), Some(30000L), 2))),
+      Seq("q1" -> Seq(Iter(2.0, Some(3.5), 40L, 17L, 3L, Some(1.25), Some(0L), 0),
+                      Iter(1.5, None, 0L, 0L, 0L, None, None, 1)),
+          "q2" -> Seq(Iter(0.25, Some(0.5), 3L, 0L, 1L, Some(0.5), Some(30000L), 2))),
       Seq("q2"), "{}", "sf")
     assert(rec ==
       "{\"metric\":\"total\",\"value\":1.75,\"unit\":\"sec\"," +
@@ -66,6 +67,7 @@ class BenchProtocolSpec extends AnyFunSuite {
       "\"cpu_sec\":{\"q1\":[3.500,null],\"q2\":[0.500]}," +
       "\"gc_ms\":{\"q1\":[40,0],\"q2\":[3]}," +
       "\"codegen_compiles\":{\"q1\":[17,0],\"q2\":[0]}," +
+      "\"schema_inferences\":{\"q1\":[3,0],\"q2\":[1]}," +
       "\"load1m\":{\"q1\":[1.25,null],\"q2\":[0.50]}," +
       "\"steal_ppm\":{\"q1\":[0,null],\"q2\":[30000]}," +
       "\"steal_retries\":{\"q1\":[0,1],\"q2\":[2]}," +

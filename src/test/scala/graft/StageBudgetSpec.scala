@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stage-count budgets for the iterative/multi-stage query class
@@ -21,31 +20,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class StageBudgetSpec extends AnyFunSuite with SparkTestSession {
 
   private val Dir = "/root/testdata/sf0.001"
-
-  /** (jobs, stages) submitted while `body` runs. */
-  private def counted(body: => Unit): (Int, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus is async; wait until the counters go quiet
-      var last = (-1, -1)
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val now = (jobs.get(), stages.get())
-        if (now == last) same += 1 else { same = 0; last = now }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** Budgets: (maxJobs, maxStages). Measured at sf0.001 (stable
     * across runs; AQE submits each shuffle stage as its own job, so
@@ -116,7 +90,7 @@ class StageBudgetSpec extends AnyFunSuite with SparkTestSession {
       // build
       SparkEntry.queries(name)(spark, Dir).queryExecution.toRdd.count(): Unit
       graft.llm.Caches.unpersistAll(blocking = true)
-      val (jobs, stages) = counted {
+      val (jobs, stages) = SparkJobs.counted(spark) {
         SparkEntry.queries(name)(spark, Dir).queryExecution.toRdd.count(): Unit
       }
       info(s"$name: jobs=$jobs stages=$stages")

@@ -189,4 +189,23 @@ class SigStoreSpec extends AnyFunSuite with SparkTestSession {
     // the earlier real erase epoch priced its 2 in-index ids
     assert(card(1).getAs[Long]("erase_rows") === 2L)
   }
+
+  test("serving a compacted generation through an erase and an arrive " +
+      "epoch submits no Spark job") {
+    import spark.implicits._
+    val root = freshStore()
+    Artifacts.compact(spark, root): Unit
+    SigStore.appendErases(Seq(4L).toDF("doc_id"), root): Unit
+    SigStore.appendArrivals(
+      df((60L, "one more arrival after the compaction lands here")),
+      "doc_id", "text", root): Unit
+    var served: MinHashLSH.SigIndex = null
+    // every frame the store reads is one it wrote: Tables knows each
+    // schema, so building the served image runs no inference job
+    assert(graft.SparkJobs.jobs(spark) {
+      served = SigStore.serve(spark, root)
+    } === 0)
+    assert(served.sets.select(col("doc_id")).as[Long].collect().sorted
+      .toSeq === Seq(1L, 2L, 3L, 5L, 6L, 9L, 10L, 60L))
+  }
 }
