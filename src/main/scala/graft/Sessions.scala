@@ -29,6 +29,15 @@ import org.apache.spark.sql.SparkSession
   *    conf: the cache is sized once per JVM, when `CodeGenerator` is
   *    first touched, so it holds only if no codegen runs before the
   *    first session is built. (DESIGN.md §6.)
+  *  - `spark.hadoop.fs.file.impl=graft.LocalFs`: with no libhadoop on
+  *    the classpath, Hadoop's local file system starts a `chmod`
+  *    process for every file and directory a write creates.
+  *    [[LocalFs]] sets the same bits in-process and keeps the `.crc`
+  *    checksums. Unset, `file:` resolves through a service file, which
+  *    on Spark's classpath picks Hive's `ProxyLocalFileSystem`. Hadoop
+  *    caches a file system by scheme and user, not class, so a `file:`
+  *    file system this JVM created before the session keeps the stock
+  *    class (DESIGN.md §6).
   */
 object Sessions {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -50,6 +59,9 @@ object Sessions {
       // q172 + q308 pass (147 entries), so a warm card run compiles
       // nothing
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // local parquet I/O without a shell process per file: the same
+      // permission bits and checksums, set in-process — see above
+      .config("spark.hadoop.fs.file.impl", "graft.LocalFs")
 
   /** local[$cpus] session sized from SPARK_GRAFT_CPUS (driver contract). */
   def local(): SparkSession = {

@@ -23,6 +23,8 @@ import org.apache.spark.sql.types.StructType
   *    produced, so a frame the engine wrote is never inferred, even
   *    after its directory is renamed (the listing is relative to the
   *    root).
+  * The listing runs in-process ([[listing]]), as do the writes'
+  * permission changes under [[LocalFs]].
   * No rows are cached: every read still lists and scans the files
   * (column pruning and predicate pushdown as before), and a rewrite
   * changes the key. The memo holds only metadata, so
@@ -48,25 +50,36 @@ object Tables {
     * inference job. */
   def schemaInferences: Long = inferred.get
 
-  /** Memo key of `path` in `spark`, or None when the path lists no
-    * file (the read then fails or infers exactly as Spark would). */
-  private def keyOf(spark: SparkSession, path: String)
-      : Option[(String, String)] = {
+  /** The leaf files under `path` (or `path` itself, when a file), as
+    * sorted `rel:length:mtime` entries, `.crc` sidecars left out; empty
+    * when nothing is there. It walks `listStatus` rather than
+    * `listFiles`: a `LocatedFileStatus` copies the permission, and
+    * Hadoop's local file system starts an `ls -ld` process per file to
+    * load it. Spark's own listing (`HadoopFSUtils`) skips it the same
+    * way. */
+  private[graft] def listing(spark: SparkSession, path: String): Seq[String] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      try {
-        val base = fs.makeQualified(root).toUri.getPath
-        val it = fs.listFiles(root, true)
-        val b = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val f = it.next()
+    val base = fs.makeQualified(root).toUri.getPath
+    val b = Seq.newBuilder[String]
+    def walk(p: Path): Unit =
+      fs.listStatus(p).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else {
           val rel = f.getPath.toUri.getPath.stripPrefix(base)
           b += s"${if (rel.isEmpty) root.getName else rel}:" +
             s"${f.getLen}:${f.getModificationTime}"
         }
-        b.result().sorted
-      } catch { case _: java.io.FileNotFoundException => Nil }
+      }
+    try { walk(root); b.result().sorted }
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Memo key of `path` in `spark`, or None when the path lists no
+    * file (the read then fails or infers exactly as Spark would). */
+  private def keyOf(spark: SparkSession, path: String)
+      : Option[(String, String)] = {
+    val files = listing(spark, path)
     // a session's parquet confs steer inference (nanosAsLong,
     // binaryAsString, ...), and they can change at runtime
     val confs = spark.conf.getAll.toSeq.filter(_._1.contains("parquet"))

@@ -37,7 +37,7 @@ object Artifacts {
     graft.Tables.write(merges.zipWithIndex
       .map { case ((l, r, c), i) => (i.toLong, l, r, c) }
       .toDF("rank", "left", "right", "pair_count")
-      .repartition(1), path + "/merges")
+      .coalesce(1), path + "/merges")
     graft.Tables.write(vocab, path + "/vocab")
   }
 
@@ -67,7 +67,7 @@ object Artifacts {
     graft.Tables.write(codebook.zipWithIndex
       .map { case (c, i) => (i, c) }.toSeq
       .toDF("cell_id", "centroid")
-      .repartition(1), path)
+      .coalesce(1), path)
   }
 
   /** The codebook back, cell order restored — byte-identical input
@@ -91,7 +91,7 @@ object Artifacts {
       (centroid, c) <- cb.zipWithIndex
     } yield (m, c, centroid)).toSeq
       .toDF("subspace", "code", "centroid")
-      .repartition(1), path)
+      .coalesce(1), path)
   }
 
   /** The PQ codebooks back in (subspace, code) order. */
@@ -118,7 +118,7 @@ object Artifacts {
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
     graft.Tables.write(Seq(Tuple1(bos.toByteArray)).toDF("bits")
-      .repartition(1), path)
+      .coalesce(1), path)
   }
 
   /** The prefilter back — byte-identical input for the pre-built

@@ -80,6 +80,33 @@ class TablesSpec extends AnyFunSuite with SparkTestSession {
     assert(rows(df) === rows(wide))
   }
 
+  test("a partitioned write keys on its nested files, .crc sidecars left out") {
+    val p = tmpDir() + "/t"
+    def write(n: Int): DataFrame = {
+      val df = spark.range(n).select(col("id"), (col("id") % 3).as("k"))
+        .coalesce(1)
+      df.write.mode("overwrite").partitionBy("k").parquet(p)
+      df
+    }
+    write(12)
+    val files = Tables.listing(spark, p).map(_.split(":").head)
+    assert(files.count(_.matches("/k=[0-2]/part-.*\\.parquet")) === 3, files)
+    assert(!files.exists(_.endsWith(".crc")), files)
+    assert(new java.io.File(p + "/k=0").list().exists(_.endsWith(".crc")),
+      "the sidecars are on disk")
+    val n0 = Tables.schemaInferences
+    Tables.read(spark, p)
+    var df: DataFrame = null
+    assert(SparkJobs.jobs(spark) { df = Tables.read(spark, p) } === 0)
+    assert(Tables.schemaInferences - n0 === 1L)
+    val before = Tables.listing(spark, p)
+    val other = write(20)
+    assert(Tables.listing(spark, p) !== before)
+    df = Tables.read(spark, p)
+    assert(Tables.schemaInferences - n0 === 2L, "the overwrite changed the key")
+    assert(rows(df.select("id", "k")) === rows(other))
+  }
+
   test("another session infers with its own parquet confs") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter

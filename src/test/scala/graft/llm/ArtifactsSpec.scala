@@ -71,6 +71,27 @@ class ArtifactsSpec extends AnyFunSuite with SparkTestSession {
     cb.indices.foreach(i => assert(back(i).toSeq === cb(i).toSeq, s"cell $i"))
   }
 
+  test("a small artifact save writes one part file in one job") {
+    import spark.implicits._
+    val cb = Array.tabulate(16)(i => Array(i.toLong, -i.toLong))
+    val bloom = Decontaminate.evalBloom(docs, "doc_id", "text").get
+    val merges = Seq.tabulate(9)(i => (s"l$i", s"r$i", i.toLong))
+    val vocab = Seq((0L, "a")).toDF("sym_id", "sym")
+    // (save, the directory holding the small frame, jobs: the bpe
+    // save also writes its one-row vocab)
+    Seq[(String => Unit, String, Int)](
+      (Artifacts.saveCodebook(spark, _, cb), "", 1),
+      (Artifacts.savePqCodebooks(spark, _, Array(cb, cb)), "", 1),
+      (Artifacts.saveBloom(spark, _, bloom), "", 1),
+      (Artifacts.saveBpe(spark, _, merges, vocab), "/merges", 2)
+    ).zipWithIndex.foreach { case ((save, sub, want), i) =>
+      val p = tmp(s"small-artifact-$i")
+      assert(graft.SparkJobs.jobs(spark)(save(p)) === want,
+        s"save $i: one job per frame, no funnel shuffle")
+      assert(new java.io.File(p + sub).list().count(_.startsWith("part-")) === 1)
+    }
+  }
+
   test("IVF search from a loaded codebook is byte-identical to the training path") {
     // the q225 contract: searchWithCodebook over Artifacts-loaded
     // centroids runs no Lloyd rounds yet returns exactly what
