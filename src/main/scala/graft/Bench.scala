@@ -20,15 +20,30 @@ object BenchProtocol {
   def expired(jvmStartMs: Long, nowMs: Long, deadlineSec: Long): Boolean =
     deadlineSec > 0 && (nowMs - jvmStartMs) / 1000L >= deadlineSec
 
-  /** One recorded iteration of one query: wall, process CPU, GC and
-    * 1-min load (None/-1 where the JVM or box cannot tell), hypervisor
-    * steal in ppm of the run's jiffies, steal retries spent, the
-    * classes codegen compiled in this JVM during the run (driver and,
-    * on a local master, executor compiles), and the parquet reads that
-    * missed [[Tables]]' schema memo and ran Spark's inference job. */
-  final case class Iter(wall: Double, cpu: Option[Double], gc: Long,
+  /** [[expired]] for this JVM, now. */
+  def pastDeadline(deadlineSec: Long): Boolean = expired(
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime,
+    System.currentTimeMillis(), deadlineSec)
+
+  /** One run's wall split at the perfbench harness's boundaries:
+    * construct (`SparkEntry.queries(name)(spark, dir)`, eager jobs an
+    * operator runs while building its frame included), plan
+    * (`queryExecution.executedPlan`) and run (`toRdd.count()`). */
+  final case class Layers(construct: Double, plan: Double, run: Double) {
+    def wall: Double = construct + plan + run
+  }
+
+  /** One recorded iteration of one query: its wall's layers, process
+    * CPU, GC and 1-min load (None/-1 where the JVM or box cannot tell),
+    * hypervisor steal in ppm of the run's jiffies, steal retries spent,
+    * the classes codegen compiled in this JVM during the run (driver
+    * and, on a local master, executor compiles), the parquet reads that
+    * missed [[Tables]]' schema memo and ran Spark's inference job, and
+    * the jobs, stages and tasks the run started. */
+  final case class Iter(layers: Layers, cpu: Option[Double], gc: Long,
       compiles: Long, inferences: Long, load: Option[Double],
-      steal: Option[Long], retries: Int) {
+      steal: Option[Long], retries: Int, counts: JobCounter.Counts) {
+    def wall: Double = layers.wall
     // unknown steal (no procfs) counts as clean: it cannot be
     // adjudicated and must not burn the retry budget
     def clean(stealMaxPpm: Long): Boolean = steal.forall(_ <= stealMaxPpm)
@@ -67,20 +82,51 @@ object BenchProtocol {
     // likewise for schema inference: a warm iteration reads every
     // table's schema from the memo
     val inferences = fmtMap(_.inferences.toString)
+    // where the wall went, and the scheduling it cost
+    val construct = fmtMap(i => dec(i.layers.construct, 3))
+    val plan = fmtMap(i => dec(i.layers.plan, 3))
+    val run = fmtMap(i => dec(i.layers.run, 3))
+    val jobs = fmtMap(_.counts.jobs.toString)
+    val stages = fmtMap(_.counts.stages.toString)
+    val tasks = fmtMap(_.counts.tasks.toString)
+    val taskSec = fmtMap(i => dec(i.counts.taskSec, 3))
     val loads = fmtMap(_.load.map(dec(_, 2)).getOrElse("null"))
     val steals = fmtMap(_.steal.map(_.toString).getOrElse("null"))
     val retries = fmtMap(_.retries.toString)
     val flaggedJson = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(r => minWall(r._2)).sum
                 else 0.0
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$iters,"cpu_sec":$cpus,"gc_ms":$gcs,"codegen_compiles":$compiles,"schema_inferences":$inferences,"load1m":$loads,"steal_ppm":$steals,"steal_retries":$retries,"steal_flagged":$flaggedJson,"env":$env,"sf":"$sf"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$iters,"cpu_sec":$cpus,"gc_ms":$gcs,"codegen_compiles":$compiles,"schema_inferences":$inferences,"construct_sec":$construct,"plan_sec":$plan,"run_sec":$run,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_sec":$taskSec,"load1m":$loads,"steal_ppm":$steals,"steal_retries":$retries,"steal_flagged":$flaggedJson,"env":$env,"sf":"$sf"}"""
   }
 }
 
 object Bench {
-  import BenchProtocol.{Iter, dec, minWall}
+  import BenchProtocol.{Iter, Layers, dec, minWall}
 
+  /** Builds, plans and runs `frame`, timing each layer. The run is the
+    * timed action: it materializes EVERY output row through the
+    * unmodified physical plan (queryExecution.toRdd). A plain .count()
+    * plans a count-aggregate over the query, and Catalyst then prunes
+    * every column the count doesn't need — for map-only queries
+    * (quality scoring, fingerprints, chunking) that collapses the
+    * benchmark to little more than a parquet metadata read, and even
+    * aggregations skip computing the un-counted sum columns (measured
+    * 3-4x under-reporting at sf0.1). */
+  def layers(frame: => org.apache.spark.sql.DataFrame): Layers = {
+    val t0 = System.nanoTime()
+    val df = frame
+    val t1 = System.nanoTime()
+    df.queryExecution.executedPlan
+    val t2 = System.nanoTime()
+    df.queryExecution.toRdd.count()
+    Layers((t1 - t0) / 1e9, (t2 - t1) / 1e9, (System.nanoTime() - t2) / 1e9)
+  }
+
+  /** Runs every query, or only the ones named in `args`. A named run
+    * prints its record and writes no detail file, so it never replaces
+    * the committed full record. */
   def main(args: Array[String]): Unit = {
+    val selected = SparkEntry.named(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // three iterations: r7's recorded bench landed on a noisy box and
     // the 2-sample min still carried 4-6x phantom regressions; a third
@@ -117,10 +163,7 @@ object Bench {
     // beats a SIGKILLed empty one — and the record says so.
     val deadlineSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "2700").toLong
-    val jvmStartMs =
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
-    def deadlineTripped: Boolean =
-      BenchProtocol.expired(jvmStartMs, System.currentTimeMillis(), deadlineSec)
+    def deadlineTripped: Boolean = BenchProtocol.pastDeadline(deadlineSec)
     // first "cpu " aggregate line of /proc/stat:
     // user nice system idle iowait irq softirq steal guest guest_nice
     // (jiffies). steal is field 8; total is the sum of the first 8
@@ -141,16 +184,6 @@ object Bench {
     // isn't attributed to whichever query happens to execute first.
     try SparkEntry.queries("q6_filtered_revenue")(spark, sfDir).count()
     catch { case _: Throwable => () }
-    // Timed action: materialize EVERY output row through the unmodified
-    // physical plan (queryExecution.toRdd). A plain .count() plans a
-    // count-aggregate over the query, and Catalyst then prunes every
-    // column the count doesn't need — for map-only queries (quality
-    // scoring, fingerprints, chunking) that collapses the benchmark to
-    // little more than a parquet metadata read, and even aggregations
-    // skip computing the un-counted sum columns (measured 3-4x
-    // under-reporting at sf0.1). toRdd.count() computes all output
-    // columns exactly as a consumer writing the result would.
-    //
     // min over iterations: the first execution of each query pays its
     // whole-stage-codegen compilation (~1s for the larger plans),
     // which at real scale amortizes to nothing — the steady-state
@@ -201,30 +234,34 @@ object Bench {
           val cpu0 = procCpuNanos
           val cc0 = compilesSoFar
           val si0 = Tables.schemaInferences
-          val t0 = System.nanoTime()
-          // a failing query must fail the BENCH, not score as the run's
-          // fastest entry — swallowing into a -1 sentinel once masked
-          // breakage behind a plausible-looking number
-          try fn(spark, sfDir).queryExecution.toRdd.count()
-          catch {
-            case e: Throwable =>
-              throw new RuntimeException(s"bench query $name failed", e)
+          // the counters are read once the wall and every other
+          // reading are taken: draining the listener bus rides none
+          val (iter, counts) = JobCounter.counted(spark.sparkContext) {
+            // a failing query must fail the BENCH, not score as the
+            // run's fastest entry — swallowing into a -1 sentinel once
+            // masked breakage behind a plausible-looking number
+            val l =
+              try layers(fn(spark, sfDir))
+              catch {
+                case e: Throwable =>
+                  throw new RuntimeException(s"bench query $name failed", e)
+              }
+            val stealPpm = for ((s0, t0s) <- st0; (s1, t1s) <- procStat())
+              yield (s1 - s0) * 1000000L / math.max(t1s - t0s, 1L)
+            Iter(l,
+              for (c0 <- cpu0; c1 <- procCpuNanos) yield (c1 - c0) / 1e9,
+              gcMs - gc0, compilesSoFar - cc0, Tables.schemaInferences - si0,
+              load0, stealPpm, attempt, _: JobCounter.Counts)
           }
-          val wall = (System.nanoTime() - t0) / 1e9
-          val stealPpm = for ((s0, t0s) <- st0; (s1, t1s) <- procStat())
-            yield (s1 - s0) * 1000000L / math.max(t1s - t0s, 1L)
-          val it = Iter(wall,
-            for (c0 <- cpu0; c1 <- procCpuNanos) yield (c1 - c0) / 1e9,
-            gcMs - gc0, compilesSoFar - cc0, Tables.schemaInferences - si0,
-            load0, stealPpm, attempt)
+          val it = iter(counts)
           // keep the least-stolen attempt so an always-dirty box still
           // records its best-available measurement (flagged below)
-          if (best.forall(b => it.steal.getOrElse(0L) <
-              b.steal.getOrElse(0L)) || best.isEmpty) best = Some(it)
+          if (best.forall(b => it.steal.getOrElse(0L) < b.steal.getOrElse(0L)))
+            best = Some(it)
           if (it.clean(stealMaxPpm) || attempt >= stealRetries ||
               stealBudgetSec <= 0 || deadlineTripped)
             done = true
-          else { attempt += 1; stealBudgetSec -= wall }
+          else { attempt += 1; stealBudgetSec -= it.wall }
         }
         best.get
     }
@@ -252,7 +289,8 @@ object Bench {
         s""","deadline_degraded":$degradedJson""" +
         s""","complete":$complete}"""
       val full = BenchProtocol.record(results, flagged, env, sfDir)
-      try {
+      // a named run only prints: the detail file holds the full board
+      if (args.isEmpty) try {
         val tmp = java.nio.file.Paths.get(detailPath + ".tmp")
         java.nio.file.Files.write(tmp, (full + "\n").getBytes("UTF-8"))
         java.nio.file.Files.move(tmp, java.nio.file.Paths.get(detailPath),
@@ -265,7 +303,7 @@ object Bench {
     }
     var degraded = List.empty[String]
     var acc = Vector.empty[(String, Seq[Iter])]
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       val n = if (deadlineTripped) { degraded ::= name; 1 } else iterations
       acc :+= name -> (1 to n).map(_ => timedIter(name, fn))
       writeRecord(acc, degraded.reverse, complete = false)

@@ -1,9 +1,12 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, LocalFileSystem,
+  Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 
@@ -52,3 +55,13 @@ object LocalFs {
     }
   }
 }
+
+/** [[LocalFs]] for Hadoop's `FileContext` API, which Spark's streaming
+  * checkpoints write through and which resolves `file:` by
+  * `fs.AbstractFileSystem.file.impl`, not `fs.file.impl`: Hadoop's
+  * `local.LocalFs` over [[LocalFs.Raw]]. `Sessions.builder` installs it. */
+class LocalFileContextFs(uri: URI, conf: Configuration) extends ChecksumFs(
+    new DelegateToFileSystem(uri, new LocalFs.Raw, conf, "file", false) {
+      // as Hadoop's `local.RawLocalFs`: any name a local path can hold
+      override def isValidName(src: String): Boolean = true
+    })

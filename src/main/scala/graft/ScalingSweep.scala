@@ -174,20 +174,20 @@ object ScalingSweep {
 
     val scales = Seq(1, 10)
     val iters = sys.env.getOrElse("SPARK_GRAFT_SCALING_ITERS", "2").toInt
-    val results = families.map { case (name, mk) =>
-      val times = scales.map { k =>
-        val t = (1 to iters).map { _ =>
-          graft.llm.Caches.unpersistAll(blocking = true)
-          val t0 = System.nanoTime()
-          mk(k).queryExecution.toRdd.count()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        println(s"SCALING $name x$k: $t s")
-        k -> t
-      }.toMap
-      val exp = math.log(times(10) / times(1)) / math.log(10.0)
-      (name, times(1), times(10), exp)
+    /** Min wall over `iters` runs of `frame`, caches dropped before
+      * each (Bench's timed action); prints it with each run's jobs. */
+    def minWall(label: String)(frame: => DataFrame): Double = {
+      val runs = (1 to iters).map { _ =>
+        graft.llm.Caches.unpersistAll(blocking = true)
+        JobCounter.counted(spark.sparkContext)(Bench.layers(frame))
+      }
+      val t = runs.map(_._1.wall).min
+      println(s"SCALING $label: $t s, jobs ${runs.map(_._2.jobs).mkString(",")}")
+      t
     }
+    val famTimes = scala.collection.mutable.LinkedHashMap[(String, Int), Double]()
+    for ((name, mk) <- families; k <- scales)
+      famTimes((name, k)) = minWall(s"$name x$k")(mk(k))
 
     // ---- lifecycle folds: FIXED batch, corpus at 1× and 10× ----
     // The maintenance claims ("a fold costs work bounded by the batch,
@@ -318,82 +318,51 @@ object ScalingSweep {
       val edges = graft.llm.IvfIndex.knnGraphWithCodebook(emb, cb, 4, 64,
         nAssign = 2).localCheckpoint()
       graft.llm.Caches.unpersistAll(blocking = true)
-      val thunks: Seq[(String, () => DataFrame)] = Seq(
-        "sig_index_fold" -> (() => {
-          val f = graft.llm.MinHashLSH.indexDelta(idx, docBatch(),
-            "doc_id", "text", 3, 8, 1, 64)
-          forceAll((Seq(f.bands, f.counts, f.sets) ++ f.evicted): _*)
-        }),
-        "sig_index_erase" -> (() => {
-          val f = graft.llm.MinHashLSH.indexErase(idx, eraseSet,
-            8, 1, 64)
-          forceAll((Seq(f.bands, f.counts, f.sets) ++ f.evicted): _*)
-        }),
-        "fuzzy_admission" -> (() =>
-          graft.llm.MinHashLSH.fuzzyAdmission(docBatch(), "doc_id",
-            "text", idx.bands, idx.sets, 3, 8, 1, 300000L)),
-        "graph_delta" -> (() =>
-          graft.llm.IvfIndex.graphDelta(emb, embBatch(), cb, assigned,
-            edges, 4, 64, nAssign = 2)),
-        "graph_erase" -> (() =>
-          graft.llm.IvfIndex.graphErase(emb, eraseVecIds(), assigned,
-            edges, 4, 64)),
-        "cc_delta_fold" -> (() =>
-          graft.llm.Dedup.ccDelta(ccExisting, ccArrivals, ccNewEdges)),
-        "sig_chain_fold_depth4" -> (() => {
-          val f = graft.llm.MinHashLSH.indexDelta(
-            graft.llm.SigStore.serve(spark, storeRoot), docBatch(),
-            "doc_id", "text", 3, 8, 1, 64)
-          forceAll((Seq(f.bands, f.counts, f.sets) ++ f.evicted): _*)
-        }))
-      for ((name, th) <- thunks) {
-        val t = (1 to iters).map { _ =>
-          graft.llm.Caches.unpersistAll(blocking = true)
-          val t0 = System.nanoTime()
-          th().queryExecution.toRdd.count()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        println(s"SCALING lifecycle $name x$k: $t s")
-        lifeTimes((name, k)) = t
-      }
+      def image(f: graft.llm.MinHashLSH.SigIndex): DataFrame =
+        forceAll((Seq(f.bands, f.counts, f.sets) ++ f.evicted): _*)
+      def chainFold(): DataFrame = image(graft.llm.MinHashLSH.indexDelta(
+        graft.llm.SigStore.serve(spark, storeRoot), docBatch(),
+        "doc_id", "text", 3, 8, 1, 64))
+      def time(name: String)(frame: => DataFrame): Unit =
+        lifeTimes((name, k)) = minWall(s"lifecycle $name x$k")(frame)
+      time("sig_index_fold")(image(graft.llm.MinHashLSH.indexDelta(idx,
+        docBatch(), "doc_id", "text", 3, 8, 1, 64)))
+      time("sig_index_erase")(image(
+        graft.llm.MinHashLSH.indexErase(idx, eraseSet, 8, 1, 64)))
+      time("fuzzy_admission")(graft.llm.MinHashLSH.fuzzyAdmission(docBatch(),
+        "doc_id", "text", idx.bands, idx.sets, 3, 8, 1, 300000L))
+      time("graph_delta")(graft.llm.IvfIndex.graphDelta(emb, embBatch(), cb,
+        assigned, edges, 4, 64, nAssign = 2))
+      time("graph_erase")(graft.llm.IvfIndex.graphErase(emb, eraseVecIds(),
+        assigned, edges, 4, 64))
+      time("cc_delta_fold")(
+        graft.llm.Dedup.ccDelta(ccExisting, ccArrivals, ccNewEdges))
+      time("sig_chain_fold_depth4")(chainFold())
       // compact UNTIMED, then time the identical fold again — the
       // post-compact cost must read fresh-artifact level (the
       // sig_index_fold row), proving the q312→compact cycle actually
       // buys back the chain debt it schedules against
       graft.llm.Artifacts.compact(spark, storeRoot): Unit
-      val tpc = (1 to iters).map { _ =>
-        graft.llm.Caches.unpersistAll(blocking = true)
-        val t0 = System.nanoTime()
-        val f = graft.llm.MinHashLSH.indexDelta(
-          graft.llm.SigStore.serve(spark, storeRoot), docBatch(),
-          "doc_id", "text", 3, 8, 1, 64)
-        forceAll((Seq(f.bands, f.counts, f.sets) ++ f.evicted): _*)
-          .queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      println(s"SCALING lifecycle sig_fold_postcompact x$k: $tpc s")
-      lifeTimes(("sig_fold_postcompact", k)) = tpc
+      time("sig_fold_postcompact")(chainFold())
     }
-    val lifeBody = lifeTimes.keys.map(_._1).toSeq.distinct.map { n =>
-      val t1 = lifeTimes((n, 1)); val t10 = lifeTimes((n, 10))
-      val e = math.log(t10 / t1) / math.log(10.0)
-      f"""  "$n": {"t1_sec": $t1%.3f, "t10_sec": $t10%.3f, "exponent": $e%.3f}"""
-    }.mkString(",\n")
-
-    val body = results.map { case (n, t1, t10, e) =>
-      f"""  "$n": {"t1_sec": $t1%.3f, "t10_sec": $t10%.3f, "exponent": $e%.3f}"""
-    }.mkString(",\n")
+    // one row per name: both walls and the fitted exponent
+    def rows(times: scala.collection.Map[(String, Int), Double]): String =
+      times.keys.map(_._1).toSeq.distinct.map { n =>
+        val t1 = times((n, 1)); val t10 = times((n, 10))
+        val e = math.log(t10 / t1) / math.log(10.0)
+        f"""  "$n": {"t1_sec": $t1%.3f, "t10_sec": $t10%.3f, "exponent": $e%.3f}"""
+      }.mkString(",\n")
     val json =
       s"""{
          |"sf_base": "$sfDir",
          |"scales": [1, 10],
          |"method": "min of $iters runs, caches dropped per run, toRdd.count; replicas vocab-renamed/rotated so global duplication does not masquerade as operator cost; scheduler floor at 1x biases exponents LOW — alarm bar is exponent > 1.5",
          |"families": {
-         |$body
+         |${rows(famTimes)}
          |},
          |"lifecycle_method": "fixed 500-row arrival batch / fixed replica-0 erase set at BOTH scales; shipped artifact built untimed and localCheckpoint-pinned per scale; timed region forces the full folded artifact image, so scan-shaped exponents up to ~1 are expected — the bar rules out corpus-recompute signatures (> 1.5). sig_chain_fold_depth4 folds the SAME batch onto a 4-epoch on-disk SigStore chain and sig_fold_postcompact onto its Artifacts.compact image: post-compact must read at sig_index_fold level, chain level strictly above it",
          |"lifecycle": {
-         |$lifeBody
+         |${rows(lifeTimes)}
          |}
          |}""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get(out),

@@ -38,6 +38,10 @@ import org.apache.spark.sql.SparkSession
   *    caches a file system by scheme and user, not class, so a `file:`
   *    file system this JVM created before the session keeps the stock
   *    class (DESIGN.md §6).
+  *  - `spark.hadoop.fs.AbstractFileSystem.file.impl=
+  *    graft.LocalFileContextFs`: the same for Hadoop's `FileContext`
+  *    API, which `fs.file.impl` does not reach and which Spark's
+  *    streaming checkpoints and state stores write through.
   */
 object Sessions {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -62,6 +66,8 @@ object Sessions {
       // local parquet I/O without a shell process per file: the same
       // permission bits and checksums, set in-process — see above
       .config("spark.hadoop.fs.file.impl", "graft.LocalFs")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        "graft.LocalFileContextFs")
 
   /** local[$cpus] session sized from SPARK_GRAFT_CPUS (driver contract). */
   def local(): SparkSession = {

@@ -28,6 +28,16 @@ object SparkEntry {
       graft.queries.TemporalQueries.queries ++
       graft.queries.GovernanceQueries.queries
 
+  /** The queries `names` names, in that order; all of them when it is
+    * empty. A typo'd name fails loudly: silently selecting nothing
+    * would make a spot-check look green while checking nothing. */
+  def named(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val unknown = names.toSet -- queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    if (names.isEmpty) queries.toSeq else names.distinct.map(n => n -> queries(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

@@ -45,17 +45,8 @@ object Verify {
     // optional third arg: comma-separated query names — builder-side
     // spot-checks of new operators without replaying the whole suite.
     // The driver always passes two args, so its full run is unchanged.
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(',').toSet else Set.empty
-    // A typo'd name must fail loudly: silently selecting nothing would
-    // write no parquet + an empty oracle_sql.json and exit 0 — a
-    // spot-check that looks green while checking nothing.
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
+      SparkEntry.named(args.lift(2).toSeq.flatMap(_.split(','))).toMap
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -69,9 +60,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val dumped =
-      if (only.isEmpty) SparkEntry.oracleSql
-      else SparkEntry.oracleSql.filter { case (n, _) => only(n) }
+    val dumped = SparkEntry.oracleSql.filter { case (n, _) => selected.contains(n) }
     val json = dumped
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -82,10 +71,7 @@ object Verify {
     // session teardown and the driver's own bookkeeping.
     val deadlineSec =
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_DEADLINE_SEC", "3000").toLong
-    val jvmStartMs =
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
-    def expired: Boolean = deadlineSec > 0 &&
-      (System.currentTimeMillis() - jvmStartMs) / 1000L >= deadlineSec
+    def expired: Boolean = BenchProtocol.pastDeadline(deadlineSec)
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     val order = cheapFirst(selected.keys.toSeq,

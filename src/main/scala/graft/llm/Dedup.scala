@@ -619,8 +619,6 @@ object Dedup {
       labels.unpersist(blocking = false)
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"CC_ROUND iter=$iter changed=$changed")
     }
     symByOwner.unpersist(blocking = false)
     // returning mid-propagation labels would silently violate the

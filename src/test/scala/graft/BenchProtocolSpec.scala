@@ -53,12 +53,17 @@ class BenchProtocolSpec extends AnyFunSuite {
   }
 
   test("the record carries per-iteration codegen_compiles next to gc_ms") {
-    import BenchProtocol.Iter
-    // schema_inferences rides next to codegen_compiles
+    import BenchProtocol.{Iter, Layers}
+    import JobCounter.Counts
+    // schema_inferences rides next to codegen_compiles, then the
+    // wall's layers and the scheduling counts
     val rec = BenchProtocol.record(
-      Seq("q1" -> Seq(Iter(2.0, Some(3.5), 40L, 17L, 3L, Some(1.25), Some(0L), 0),
-                      Iter(1.5, None, 0L, 0L, 0L, None, None, 1)),
-          "q2" -> Seq(Iter(0.25, Some(0.5), 3L, 0L, 1L, Some(0.5), Some(30000L), 2))),
+      Seq("q1" -> Seq(Iter(Layers(1.25, 0.125, 0.625), Some(3.5), 40L, 17L, 3L,
+                        Some(1.25), Some(0L), 0, Counts(12, 14, 40, 3.25)),
+                      Iter(Layers(0.5, 0.0625, 0.9375), None, 0L, 0L, 0L,
+                        None, None, 1, Counts(12, 13, 38, 2.5))),
+          "q2" -> Seq(Iter(Layers(0.0, 0.0, 0.25), Some(0.5), 3L, 0L, 1L,
+                        Some(0.5), Some(30000L), 2, Counts(1, 1, 4, 0.0)))),
       Seq("q2"), "{}", "sf")
     assert(rec ==
       "{\"metric\":\"total\",\"value\":1.75,\"unit\":\"sec\"," +
@@ -68,6 +73,13 @@ class BenchProtocolSpec extends AnyFunSuite {
       "\"gc_ms\":{\"q1\":[40,0],\"q2\":[3]}," +
       "\"codegen_compiles\":{\"q1\":[17,0],\"q2\":[0]}," +
       "\"schema_inferences\":{\"q1\":[3,0],\"q2\":[1]}," +
+      "\"construct_sec\":{\"q1\":[1.250,0.500],\"q2\":[0.000]}," +
+      "\"plan_sec\":{\"q1\":[0.125,0.063],\"q2\":[0.000]}," +
+      "\"run_sec\":{\"q1\":[0.625,0.938],\"q2\":[0.250]}," +
+      "\"jobs\":{\"q1\":[12,12],\"q2\":[1]}," +
+      "\"stages\":{\"q1\":[14,13],\"q2\":[1]}," +
+      "\"tasks\":{\"q1\":[40,38],\"q2\":[4]}," +
+      "\"task_sec\":{\"q1\":[3.250,2.500],\"q2\":[0.000]}," +
       "\"load1m\":{\"q1\":[1.25,null],\"q2\":[0.50]}," +
       "\"steal_ppm\":{\"q1\":[0,null],\"q2\":[30000]}," +
       "\"steal_retries\":{\"q1\":[0,1],\"q2\":[2]}," +

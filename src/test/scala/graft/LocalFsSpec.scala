@@ -3,8 +3,9 @@ package graft
 import java.net.URI
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem,
-  Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{AbstractFileSystem, ChecksumException, CreateFlag,
+  FileContext, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.functions._
@@ -16,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * their verification, and defers to Hadoop for the bits `chmod` treats
   * specially. Like Hive's `ProxyLocalFileSystem`, which `file:`
   * resolves to on Spark's classpath when unset, it refuses to rename
-  * onto an existing file. */
+  * onto an existing file. [[LocalFileContextFs]] does the same for
+  * Hadoop's `FileContext` API (streaming checkpoints). */
 class LocalFsSpec extends AnyFunSuite with SparkTestSession {
 
   private def tmpDir(): java.nio.file.Path =
@@ -155,5 +157,47 @@ class LocalFsSpec extends AnyFunSuite with SparkTestSession {
     assert(new String(Files.readAllBytes(d.resolve("b"))) === "b")
     assert(fs.rename(a, c))
     assert(new String(Files.readAllBytes(d.resolve("c"))) === "a")
+  }
+
+  /** A `FileContext` over `file:` through `impl`, with a Hadoop umask
+    * unlike the process umask, so the bits come from setPermission. */
+  private def fileContext(impl: String): FileContext = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.permissions.umask-mode", "027")
+    conf.set("fs.AbstractFileSystem.file.impl", impl)
+    FileContext.getFileContext(URI.create("file:///"), conf)
+  }
+
+  /** What a checkpoint writer does: a directory, a temp file, a rename
+    * onto the final name. */
+  private def checkpointLike(fc: FileContext, root: java.nio.file.Path): Unit = {
+    val dir = new Path(root.resolve("offsets").toUri)
+    fc.mkdir(dir, FsPermission.getDirDefault, true)
+    val tmp = new Path(dir, ".0.tmp")
+    val o = fc.create(tmp, java.util.EnumSet.of(CreateFlag.CREATE))
+    o.writeBytes("v1\n{}")
+    o.close()
+    fc.rename(tmp, new Path(dir, "0"))
+  }
+
+  test("FileContext resolves file: to graft.LocalFileContextFs") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val afs = AbstractFileSystem.get(URI.create("file:///"), conf)
+    assert(afs.getClass === classOf[LocalFileContextFs])
+  }
+
+  test("FileContext writes keep a .crc sidecar and the bits stock LocalFs sets") {
+    val d = tmpDir()
+    checkpointLike(fileContext(classOf[LocalFileContextFs].getName),
+      d.resolve("engine"))
+    checkpointLike(fileContext("org.apache.hadoop.fs.local.LocalFs"),
+      d.resolve("stock"))
+    val engine = modes(d.resolve("engine"))
+    assert(engine.keySet === Set("", "offsets", "offsets/0", "offsets/.0.crc"))
+    assert(engine === modes(d.resolve("stock")))
+    def crc(side: String) = Files.readAllBytes(d.resolve(s"$side/offsets/.0.crc")).toSeq
+    assert(crc("engine") === crc("stock"))
+    assert(engine("offsets/0") === oct("640"), "the umask applied by setPermission")
+    assert(engine("offsets") === oct("750"))
   }
 }

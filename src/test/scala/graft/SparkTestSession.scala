@@ -21,33 +21,12 @@ object SparkTestSession {
   }
 }
 
-/** Jobs and stages a session's context submits while `body` runs. */
+/** Jobs and stages a session's context submits while `body` runs,
+  * from the engine's [[JobCounter]]. */
 object SparkJobs {
-  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-    SparkListenerStageSubmitted}
-
   def counted(spark: SparkSession)(body: => Unit): (Int, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus is async; wait until the counters go quiet
-      var last = (-1, -1)
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val now = (jobs.get(), stages.get())
-        if (now == last) same += 1 else { same = 0; last = now }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(l)
+    val c = JobCounter.counted(spark.sparkContext)(body)._2
+    (c.jobs.toInt, c.stages.toInt)
   }
 
   /** Jobs submitted while `body` runs. */
