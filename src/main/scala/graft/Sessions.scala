@@ -29,6 +29,12 @@ import org.apache.spark.sql.SparkSession
   *    conf: the cache is sized once per JVM, when `CodeGenerator` is
   *    first touched, so it holds only if no codegen runs before the
   *    first session is built. (DESIGN.md §6.)
+  *  - `spark.sql.codegen.useIdInClassName=false`: whole-stage codegen
+  *    otherwise writes the codegen stage id into each generated class
+  *    name, and AQE numbers those stages differently from run to run,
+  *    so a warm run's code misses the cache on the name alone (q310
+  *    compiled 20 classes on its second pass). Without the id the
+  *    class name is fixed and identical code hits the cache.
   *  - `spark.hadoop.fs.file.impl=graft.LocalFs`: with no libhadoop on
   *    the classpath, Hadoop's local file system starts a `chmod`
   *    process for every file and directory a write creates.
@@ -63,6 +69,9 @@ object Sessions {
       // q172 + q308 pass (147 entries), so a warm card run compiles
       // nothing
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // one class name for every codegen stage, so identical code that
+      // AQE numbered differently still hits the cache — see above
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // local parquet I/O without a shell process per file: the same
       // permission bits and checksums, set in-process — see above
       .config("spark.hadoop.fs.file.impl", "graft.LocalFs")

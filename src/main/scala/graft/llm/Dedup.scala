@@ -341,8 +341,8 @@ object Dedup {
     * ONE doc-keyed aggregate whose projection is row-local array
     * arithmetic (covered = the union of [start, start+gramN) windows;
     * survivors = tokens at uncovered offsets). So
-    * [[graft.streaming.Streams.spanStripIngest]] IS this function on
-    * a streaming frame (stream == batch pinned in StreamingSpec).
+    * a streaming frame runs this very function (stream == batch
+    * pinned in StreamingSpec).
     *
     * 100 TB shape: the one shuffle keys (token + dup-start) rows by
     * doc_id — the same corpus-token-order footprint any reassembly

@@ -102,8 +102,8 @@ object Drift {
     * joins the broadcast baseline pivot FIRST, and everything
     * aggregates in exactly ONE group-keyed pass — join-before-
     * aggregate, single aggregation, so the function is
-    * streaming-legal as-is and [[graft.streaming.Streams.driftIngest]]
-    * runs it verbatim (stream == batch pinned in StreamingSpec).
+    * streaming-legal as-is and a streaming frame runs it verbatim
+    * (stream == batch pinned in StreamingSpec).
     *
     * Semantics vs the card: values outside `cells` lump into one
     * OTHER bucket (an unseen language still alarms — it lands in a

@@ -110,8 +110,8 @@ object Importance {
     * half of the train-once/serve-many contract, and STREAMING-SAFE
     * BY CONSTRUCTION: token-level scoring (no intermediate
     * per-(doc, bucket) aggregate) means exactly ONE aggregation, so
-    * [[graft.streaming.Streams.importanceIngest]] runs this very
-    * function on a streaming frame. Arithmetic is identical to
+    * a streaming frame of arrivals runs this very function (pinned
+    * in StreamingSpec). Arithmetic is identical to
     * [[docScores]] (Σ over tokens of w ≡ Σ_b c·w). Buckets the
     * training pool never saw score at `unseenWppm`
     * ([[unseenWeight]]); null-text arrivals drop out (no features,

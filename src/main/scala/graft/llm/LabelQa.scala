@@ -23,72 +23,115 @@ object LabelQa {
   /** One-row Cohen's-kappa card over a `(… aCol, bCol …)` frame of
     * paired label assignments (one row per item).
     *
-    * Exact integer spelling: ONE (a, b) cell aggregate over the
-    * corpus — everything downstream (marginals, the chance product,
-    * the kappa ratio) is class-count-sized. With counts
-    * `n`, `agree`, `na_c`, `nb_c`:
+    * Exact integer spelling over the counts `n`, `agree`, `na_c`,
+    * `nb_c` (the [[cohen]] core's two aggregates):
     *
     *   po_ppm    = ⌊10⁶·agree / n⌋
     *   pe_sum    = Σ_c na_c·nb_c          (exact, decimal(38,0))
     *   pe_ppm    = ⌊10⁶·pe_sum / n²⌋
     *   kappa_ppm = ±⌊10⁶·|agree·n − pe_sum| / (n² − pe_sum)⌋
     *
-    * kappa is SIGNED (systematic disagreement reads negative), and
-    * floor-of-|·| with the sign reapplied is spelled identically on
-    * both engines — Spark's decimal `div` truncates toward zero while
-    * DuckDB's `//` floors, so a bare quotient of a negative numerator
-    * would differ by one ulp between engines. The degenerate
-    * single-class-both-sides corpus (n² = pe_sum) reads kappa 0 via
-    * the greatest(…, 1) guard, not an engine-dependent null.
+    * kappa is SIGNED (systematic disagreement reads negative; see
+    * [[signedPpm]]). The degenerate single-class-both-sides corpus
+    * (n² = pe_sum) reads kappa 0 via the greatest(…, 1) guard, not an
+    * engine-dependent null; the empty corpus reads zeros.
     *
     * Output: `(n_items, n_agree, po_ppm, pe_sum, pe_ppm, kappa_ppm,
     * n_classes_a, n_classes_b)`. Null labels are real categories
     * (grouped as their own class) — a labeler that abstains disagrees
     * with one that commits. */
-  def kappaCard(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val qa = graft.Names.quoted(aCol)
-    val qb = graft.Names.quoted(bCol)
-    val cells = Caches.persistTracked(
-      pairs.groupBy(col(qa).as("__la"), col(qb).as("__lb"))
-        .agg(count(lit(1)).as("__n")))
-    val na = cells.groupBy(col("__la").as("__lab_a"))
-      .agg(sum(col("__n")).as("__na"))
-    val nb = cells.groupBy(col("__lb").as("__lab_b"))
-      .agg(sum(col("__n")).as("__nb"))
-    // null-safe marginal join: a null label is a real category (an
-    // abstaining labeler), and a plain equi-join would drop its
-    // marginal product from the chance term on both engines
-    val marg = na.join(nb, col("__lab_a") <=> col("__lab_b"), "full_outer")
-      .agg(
-        coalesce(sum(coalesce(col("__na"), lit(0L)).cast("decimal(38,0)") *
-          coalesce(col("__nb"), lit(0L)).cast("decimal(38,0)")),
-          lit(0L).cast("decimal(38,0)")).as("__pe_sum"),
-        count(col("__na")).as("n_classes_a"),
-        count(col("__nb")).as("n_classes_b"))
-    // coalesce matches kappaPivot's empty-corpus discipline: sum over
-    // zero cells is null, and a null n_items would propagate into
-    // every ppm column while the pivot spelling reads zeros
-    val tot = cells.agg(
-      coalesce(sum(col("__n")), lit(0L)).as("n_items"),
-      coalesce(sum(when(col("__la") <=> col("__lb"), col("__n"))
-        .otherwise(0L)), lit(0L)).as("n_agree"))
-    tot.crossJoin(marg).select(
+  def kappaCard(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    cohen(pairs.select(col(graft.Names.quoted(aCol)).as("__la"),
+      col(graft.Names.quoted(bCol)).as("__lb")), Nil)
+
+  /** Cohen's kappa per group over `(group…, __la, __lb)` rows — the one
+    * implementation behind [[kappaCard]] (no groups), [[accuracyCard]]
+    * (per rater, truth on side b) and [[kappaMatrix]] (per rater pair).
+    * Two aggregates: every row becomes its two sides, one
+    * `(group…, label)` aggregate counts side a, side b and the
+    * agreements (credited to side a), and one per-group aggregate sums
+    * those into `n_items`, `n_agree`, `pe_sum = Σ na·nb` and the class
+    * counts. The label is a grouping key, so a null label (an
+    * abstaining labeler) is its own class on both sides. */
+  private def cohen(pairs: DataFrame, groups: Seq[String]): DataFrame = {
+    val g = groups.map(col)
+    val sideA = col("__side_a")
+    val zeroDec = lit(0L).cast("decimal(38,0)")
+    val cells = pairs
+      .withColumn("__side_a", explode(array(lit(true), lit(false))))
+      .groupBy(g :+ when(sideA, col("__la")).otherwise(col("__lb"))
+        .as("__lab"): _*)
+      .agg(count(when(sideA, 1)).as("__na"),
+        count(when(!sideA, 1)).as("__nb"),
+        count(when(sideA && (col("__la") <=> col("__lb")), 1)).as("__ag"))
+    // coalesce: a global aggregate over the empty corpus sums to null,
+    // and the card reads zeros there
+    cohenRatios(cells.groupBy(g: _*).agg(
+      coalesce(sum(col("__na")), lit(0L)).as("n_items"),
+      coalesce(sum(col("__ag")), lit(0L)).as("n_agree"),
+      coalesce(sum(col("__na").cast("decimal(38,0)") * col("__nb")),
+        zeroDec).as("__pe_sum"),
+      count(when(col("__na") > 0L, 1)).as("n_classes_a"),
+      count(when(col("__nb") > 0L, 1)).as("n_classes_b")), groups)
+  }
+
+  /** The Cohen card's columns from `(group…, n_items, n_agree,
+    * __pe_sum, n_classes_a, n_classes_b)` — shared by [[cohen]] and
+    * [[kappaPivot]]. */
+  private def cohenRatios(counts: DataFrame, groups: Seq[String]): DataFrame = {
+    val n2 = "cast(n_items as decimal(38,0)) * n_items"
+    val agreeN = "cast(n_agree as decimal(38,0)) * n_items"
+    counts.select(groups.map(col) ++ Seq(
       col("n_items"), col("n_agree"),
-      expr("cast(cast(n_agree as decimal(38,0)) * 1000000 " +
-        "div greatest(n_items, 1L) as bigint)").as("po_ppm"),
+      ppm("cast(n_agree as decimal(38,0))", "n_items").as("po_ppm"),
       col("__pe_sum").cast("bigint").as("pe_sum"),
-      expr("cast(__pe_sum * 1000000 div greatest(" +
-        "cast(n_items as decimal(38,0)) * n_items, 1L) as bigint)")
-        .as("pe_ppm"),
-      expr("""cast(case
-        | when cast(n_agree as decimal(38,0)) * n_items - __pe_sum >= 0
-        | then (cast(n_agree as decimal(38,0)) * n_items - __pe_sum) * 1000000
-        |   div greatest(cast(n_items as decimal(38,0)) * n_items - __pe_sum, 1L)
-        | else -((__pe_sum - cast(n_agree as decimal(38,0)) * n_items) * 1000000
-        |   div greatest(cast(n_items as decimal(38,0)) * n_items - __pe_sum, 1L))
-        | end as bigint)""".stripMargin).as("kappa_ppm"),
+      ppm("__pe_sum", n2).as("pe_ppm"),
+      signedPpm(s"$agreeN - __pe_sum", s"$n2 - __pe_sum").as("kappa_ppm"),
       col("n_classes_a").cast("bigint").as("n_classes_a"),
-      col("n_classes_b").cast("bigint").as("n_classes_b"))
+      col("n_classes_b").cast("bigint").as("n_classes_b")): _*)
+  }
+
+  /** `⌊10⁶·num / max(den, 1)⌋` as bigint, for SQL operands with
+    * `num ≥ 0`. */
+  private def ppm(num: String, den: String): Column =
+    expr(s"cast(($num) * 1000000 div greatest($den, 1) as bigint)")
+
+  /** `±⌊10⁶·|num| / max(den, 1)⌋` as bigint: the floor of the magnitude
+    * with the sign put back. Spark's decimal `div` truncates toward
+    * zero while DuckDB's `//` floors, so a bare quotient of a negative
+    * numerator would differ by one ulp between engines; this spelling
+    * reads the same on both. */
+  private def signedPpm(num: String, den: String): Column =
+    expr(s"""cast(case when ($num) >= 0
+      | then ($num) * 1000000 div greatest($den, 1)
+      | else -(-($num) * 1000000 div greatest($den, 1))
+      | end as bigint)""".stripMargin)
+
+  /** Checks a pinned class list (nonempty, distinct, without the
+    * [[OtherLabel]] sentinel) and returns the lump: a pinned label
+    * stays, anything else (null included) becomes [[OtherLabel]]. */
+  private def lumper(classes: Seq[String]): Column => Column = {
+    require(classes.nonEmpty, "need at least one pinned class")
+    require(classes.distinct == classes, "pinned classes must be distinct")
+    require(!classes.contains(OtherLabel),
+      s"'$OtherLabel' is reserved for the lump bucket")
+    c => when(c.isin(classes.map(x => x: Any): _*), c)
+      .otherwise(lit(OtherLabel))
+  }
+
+  /** `Σ_{i < n} f(i)` over per-class columns. */
+  private def sumOver(n: Int)(f: Int => Column): Column =
+    (0 until n).map(f).reduce(_ + _)
+
+  /** `L = lcm(1 .. maxRaters − 1)`, the integer scale every per-item
+    * alpha weight 1/(k_i − 1) divides. */
+  private def lcmScale(maxRaters: Int): Long = {
+    require(maxRaters >= 2, "alpha needs at least two raters")
+    val lcm = (1 until maxRaters).map(BigInt(_))
+      .reduce((a, b) => a * b / a.gcd(b))
+    require(lcm <= BigInt(Long.MaxValue) / 1000000L,
+      s"maxRaters $maxRaters overflows the lcm scale")
+    lcm.toLong
   }
 
   /** Lumped-label sentinel for [[kappaPivot]] — labels outside the
@@ -101,8 +144,8 @@ object LabelQa {
     * aggregate (per class, conditional-sum marginals + the agree
     * count) followed by row-local kappa arithmetic on the single
     * aggregated row — streaming-legal as-is (a live feed cannot run
-    * [[kappaCard]]'s aggregate-of-aggregate marginal join), which is
-    * why [[graft.streaming.Streams.kappaIngest]] IS this function.
+    * [[kappaCard]]'s aggregate of an aggregate), so a streaming frame
+    * runs this function unchanged.
     * Labels outside `classes` (and nulls — an abstaining labeler)
     * lump into [[OtherLabel]]; over a corpus whose labels the list
     * covers, the result row equals [[kappaCard]]'s exactly, and under
@@ -111,16 +154,9 @@ object LabelQa {
     * total, whatever the stream length. */
   def kappaPivot(pairs: DataFrame, aCol: String, bCol: String,
       classes: Seq[String]): DataFrame = {
-    require(classes.nonEmpty, "need at least one pinned class")
-    require(classes.distinct == classes, "pinned classes must be distinct")
-    require(!classes.contains(OtherLabel),
-      s"'$OtherLabel' is reserved for the lump bucket")
-    val qa = col(graft.Names.quoted(aCol))
-    val qb = col(graft.Names.quoted(bCol))
-    val la = when(qa.isin(classes.map(x => x: Any): _*), qa)
-      .otherwise(lit(OtherLabel))
-    val lb = when(qb.isin(classes.map(x => x: Any): _*), qb)
-      .otherwise(lit(OtherLabel))
+    val lump = lumper(classes)
+    val la = lump(col(graft.Names.quoted(aCol)))
+    val lb = lump(col(graft.Names.quoted(bCol)))
     val cs = classes :+ OtherLabel
     val marginalAggs = cs.zipWithIndex.flatMap { case (c, i) =>
       // coalesce: sum over the empty corpus is null, and a null
@@ -134,30 +170,13 @@ object LabelQa {
       Seq(coalesce(count(lit(1)), lit(0L)).as("n_items"),
         coalesce(sum(when(la === lb, 1L).otherwise(0L)), lit(0L))
           .as("n_agree")) ++ marginalAggs
-    val one = pairs.agg(aggs.head, aggs.tail: _*)
-    val peSum = cs.indices
-      .map(i => col(s"__na_$i").cast("decimal(38,0)") * col(s"__nb_$i"))
-      .reduce(_ + _)
-    val nClasses = (pfx: String) => cs.indices
-      .map(i => when(col(s"__${pfx}_$i") > 0L, 1L).otherwise(0L))
-      .reduce(_ + _)
-    one.withColumn("__pe_sum", peSum).select(
-      col("n_items"), col("n_agree"),
-      expr("cast(cast(n_agree as decimal(38,0)) * 1000000 " +
-        "div greatest(n_items, 1L) as bigint)").as("po_ppm"),
-      col("__pe_sum").cast("bigint").as("pe_sum"),
-      expr("cast(__pe_sum * 1000000 div greatest(" +
-        "cast(n_items as decimal(38,0)) * n_items, 1L) as bigint)")
-        .as("pe_ppm"),
-      expr("""cast(case
-        | when cast(n_agree as decimal(38,0)) * n_items - __pe_sum >= 0
-        | then (cast(n_agree as decimal(38,0)) * n_items - __pe_sum) * 1000000
-        |   div greatest(cast(n_items as decimal(38,0)) * n_items - __pe_sum, 1L)
-        | else -((__pe_sum - cast(n_agree as decimal(38,0)) * n_items) * 1000000
-        |   div greatest(cast(n_items as decimal(38,0)) * n_items - __pe_sum, 1L))
-        | end as bigint)""".stripMargin).as("kappa_ppm"),
-      nClasses("na").cast("bigint").as("n_classes_a"),
-      nClasses("nb").cast("bigint").as("n_classes_b"))
+    val nClasses = (pfx: String) =>
+      sumOver(cs.size)(i => when(col(s"__${pfx}_$i") > 0L, 1L).otherwise(0L))
+    cohenRatios(pairs.agg(aggs.head, aggs.tail: _*)
+      .withColumn("__pe_sum", sumOver(cs.size)(i =>
+        col(s"__na_$i").cast("decimal(38,0)") * col(s"__nb_$i")))
+      .withColumn("n_classes_a", nClasses("na"))
+      .withColumn("n_classes_b", nClasses("nb")), Nil)
   }
 
   /** Fleiss' kappa (Fleiss 1971) over a LONG-format ratings frame
@@ -179,8 +198,8 @@ object LabelQa {
     *   pe_ppm    = ⌊10⁶·M2 / max(T², 1)⌋
     *   kappa_ppm = ±⌊10⁶·|(A−T)·T² − M2·P| / max(P·(T² − M2), 1)⌋
     *
-    * (signed, the [[kappaCard]] truncation-direction CASE). Null
-    * labels are a real category (abstain). Fleiss assumes every item
+    * (signed, [[signedPpm]]). Null labels are a real category
+    * (abstain). Fleiss assumes every item
     * carries the SAME rating count; instead of assuming it the card
     * REPORTS `unbalanced_items` (items whose k_i differs from the
     * modal... from the max k) — a nonzero value means the po
@@ -219,7 +238,7 @@ object LabelQa {
     val item = col("__kind") === 0
     def dec(c: Column): Column = coalesce(sum(c).cast("decimal(38,0)"),
       lit(0L).cast("decimal(38,0)"))
-    cells.agg(
+    fleissRatios(cells.agg(
       coalesce(sum(when(item, col("__n"))), lit(0L)).as("n_items"),
       coalesce(max(when(item, col("__k"))), lit(0L)).as("n_raters"),
       coalesce(sum(when(item, col("__n"))) -
@@ -231,22 +250,21 @@ object LabelQa {
         (col("__k") - 1L))).as("__p"),
       dec(when(!item, col("__n").cast("decimal(38,0)") * col("__n")))
         .as("__m2"),
-      count(when(!item, lit(1))).as("n_classes"))
-      .select(
-      col("n_items"), col("n_raters").cast("bigint").as("n_raters"),
-      col("n_classes"), col("unbalanced_items"),
-      expr("cast((__a - __t) * 1000000 div greatest(__p, 1) as bigint)")
-        .as("po_ppm"),
-      expr("cast(__m2 * 1000000 div greatest(__t * __t, 1) as bigint)")
-        .as("pe_ppm"),
-      expr("""cast(case
-        | when (__a - __t) * __t * __t - __m2 * __p >= 0
-        | then ((__a - __t) * __t * __t - __m2 * __p) * 1000000
-        |   div greatest(__p * (__t * __t - __m2), 1)
-        | else -((__m2 * __p - (__a - __t) * __t * __t) * 1000000
-        |   div greatest(__p * (__t * __t - __m2), 1))
-        | end as bigint)""".stripMargin).as("kappa_ppm"))
+      count(when(!item, lit(1))).as("n_classes")))
   }
+
+  /** The Fleiss card's columns from `(n_items, n_raters, n_classes,
+    * unbalanced_items, __t, __a, __p, __m2)` — shared by [[fleissCard]]
+    * and [[fleissPivot]]. */
+  private def fleissRatios(counts: DataFrame): DataFrame =
+    counts.select(
+      col("n_items"), col("n_raters").cast("bigint").as("n_raters"),
+      col("n_classes").cast("bigint").as("n_classes"),
+      col("unbalanced_items"),
+      ppm("__a - __t", "__p").as("po_ppm"),
+      ppm("__m2", "__t * __t").as("pe_ppm"),
+      signedPpm("(__a - __t) * __t * __t - __m2 * __p",
+        "__p * (__t * __t - __m2)").as("kappa_ppm"))
 
   /** Streaming-legal Fleiss spelling — [[fleissCard]]'s k-rater card
     * as ONE global aggregate (the [[kappaPivot]] discipline,
@@ -255,13 +273,13 @@ object LabelQa {
     * ingest — all raters' votes on an item land together), so every
     * per-item quantity Fleiss needs (k_i, Σ_c n_ic², per-class
     * counts) is ROW-LOCAL array arithmetic over the pinned class
-    * list, and the card reduces to one aggregate row —
-    * `Streams.fleissIngest` IS this function.
+    * list, and the card reduces to one aggregate row — a streaming
+    * frame runs this function unchanged.
     *
     * Config replaces the card's data-derived fields: the class list
     * is pinned (unpinned labels and null lump to [[OtherLabel]], the
-    * driftIngest bucket discipline — an aggregate-derived vocabulary
-    * is streaming-illegal), and `expectedRaters` is pinned
+    * [[Drift.chiSquarePivot]] bucket discipline — an aggregate-derived
+    * vocabulary is streaming-illegal), and `expectedRaters` is pinned
     * (`unbalanced_items` counts items whose k_i differs from the
     * CONFIG, where the batch card compares against the observed max —
     * another aggregate-of-aggregate). On a covering class list and a
@@ -273,32 +291,10 @@ object LabelQa {
     * length; nothing keyed wider than the single aggregate row. */
   def fleissPivot(items: DataFrame, labelsCol: String,
       classes: Seq[String], expectedRaters: Int): DataFrame = {
-    require(classes.nonEmpty, "need at least one pinned class")
-    require(classes.distinct == classes, "pinned classes must be distinct")
-    require(!classes.contains(OtherLabel),
-      s"'$OtherLabel' is reserved for the lump bucket")
+    val wide = classCounts(items, labelsCol, classes)
     require(expectedRaters >= 2, "a consensus needs at least two raters")
-    val cs = classes :+ OtherLabel
-    val ql = graft.Names.quoted(labelsCol)
-    // Column-API lambdas, not string-built SQL: a pinned class
-    // containing a quote or backslash must lump/count correctly (the
-    // kappaPivot isin/when discipline), never re-parse as SQL syntax.
-    // A NULL labels array is an item with zero ratings (k_i = 0: it
-    // counts as an item and as unbalanced, contributes no pairs) —
-    // not a null row that would silently drop out of the sums.
-    val lumped = transform(
-      coalesce(col(ql), typedLit(Seq.empty[String])),
-      x => when(x.isin(classes.map(c => c: Any): _*), x)
-        .otherwise(lit(OtherLabel)))
-    val cnt = cs.zipWithIndex.map { case (c, i) =>
-      size(filter(col("__labs"), x => x === lit(c))).cast("bigint")
-        .as(s"__c_$i")
-    }
-    val wide = items.select(lumped.as("__labs"))
-      .select(Seq(size(col("__labs")).cast("bigint").as("__ki")) ++
-        cnt: _*)
-    val ai = cs.indices.map(i => col(s"__c_$i") * col(s"__c_$i"))
-      .reduce(_ + _)
+    val k = classes.size + 1
+    val ai = sumOver(k)(i => col(s"__c_$i") * col(s"__c_$i"))
     val zeroDec = lit(0L).cast("decimal(38,0)")
     val aggs = Seq(
       coalesce(count(lit(1)), lit(0L)).as("n_items"),
@@ -308,30 +304,40 @@ object LabelQa {
       coalesce(sum(ai).cast("decimal(38,0)"), zeroDec).as("__a"),
       coalesce(sum((col("__ki") * (col("__ki") - 1L))
         .cast("decimal(38,0)")), zeroDec).as("__p")) ++
-      cs.indices.map(i =>
+      (0 until k).map(i =>
         coalesce(sum(col(s"__c_$i")), lit(0L)).as(s"__m_$i"))
-    val one = wide.agg(aggs.head, aggs.tail: _*)
-    val m2 = cs.indices
-      .map(i => col(s"__m_$i").cast("decimal(38,0)") * col(s"__m_$i"))
-      .reduce(_ + _)
-    val nClasses = cs.indices
-      .map(i => when(col(s"__m_$i") > 0L, 1L).otherwise(0L))
-      .reduce(_ + _)
-    one.withColumn("__m2", m2).select(
-      col("n_items"), lit(expectedRaters.toLong).as("n_raters"),
-      nClasses.cast("bigint").as("n_classes"), col("unbalanced_items"),
-      expr("cast((__a - __t) * 1000000 div greatest(__p, 1) as bigint)")
-        .as("po_ppm"),
-      expr("cast(__m2 * 1000000 div greatest(__t * __t, 1) as bigint)")
-        .as("pe_ppm"),
-      expr("""cast(case
-        | when (__a - __t) * __t * __t - __m2 * __p >= 0
-        | then ((__a - __t) * __t * __t - __m2 * __p) * 1000000
-        |   div greatest(__p * (__t * __t - __m2), 1)
-        | else -((__m2 * __p - (__a - __t) * __t * __t) * 1000000
-        |   div greatest(__p * (__t * __t - __m2), 1))
-        | end as bigint)""".stripMargin).as("kappa_ppm"))
+    fleissRatios(classMarginals(wide.agg(aggs.head, aggs.tail: _*), k)
+      .withColumn("n_raters", lit(expectedRaters.toLong)))
   }
+
+  /** One row per item of a label-ARRAY frame: `__ki`, its rating
+    * count, and `__c_i`, its count of pinned class i after the
+    * [[lumper]] (index `classes.size` is [[OtherLabel]]). Column-API
+    * lambdas, not string-built SQL: a pinned class containing a quote
+    * or backslash lumps and counts correctly, never re-parsing as SQL
+    * syntax. A NULL labels array is an item with zero ratings
+    * (k_i = 0), not a null row that would silently drop out of the
+    * sums. */
+  private def classCounts(items: DataFrame, labelsCol: String,
+      classes: Seq[String]): DataFrame = {
+    val labs = transform(coalesce(col(graft.Names.quoted(labelsCol)),
+      typedLit(Seq.empty[String])), lumper(classes))
+    items.select(labs.as("__labs")).select(
+      size(col("__labs")).cast("bigint").as("__ki") +:
+        (classes :+ OtherLabel).zipWithIndex.map { case (c, i) =>
+          size(filter(col("__labs"), x => x === lit(c))).cast("bigint")
+            .as(s"__c_$i")
+        }: _*)
+  }
+
+  /** Adds `__m2 = Σ_i m_i²` and `n_classes` (classes with m_i > 0)
+    * over the `k` per-class marginal columns `__m_i` of a pivot's
+    * aggregate row. */
+  private def classMarginals(one: DataFrame, k: Int): DataFrame =
+    one.withColumn("__m2",
+        sumOver(k)(i => col(s"__m_$i").cast("decimal(38,0)") * col(s"__m_$i")))
+      .withColumn("n_classes",
+        sumOver(k)(i => when(col(s"__m_$i") > 0L, 1L).otherwise(0L)))
 
   /** Krippendorff's alpha (nominal metric) over the same long-format
     * ratings frame — the agreement estimator that handles MISSING
@@ -359,7 +365,7 @@ object LabelQa {
     *   alpha_ppm = ±⌊10⁶·|L·(T² − M2) − DoN·(T − 1)|
     *                 / max(L·(T² − M2), 1)⌋
     *
-    * (signed, the [[kappaCard]] truncation CASE; alpha = 1 −
+    * (signed, [[signedPpm]]; alpha = 1 −
     * DoN·(T−1)/(L·(T²−M2)) cleared of fractions). Null labels stay a
     * real category (abstain-with-commitment); a MISSING row is the
     * absent-rating case alpha exists for. Items with k_i < 2 are
@@ -378,12 +384,7 @@ object LabelQa {
     * marginal; nothing keyed wider than the item id. */
   def alphaCard(ratings: DataFrame, itemCol: String, raterCol: String,
       labelCol: String, maxRaters: Int): DataFrame = {
-    require(maxRaters >= 2, "alpha needs at least two raters")
-    val lcm = (1 until maxRaters).map(BigInt(_))
-      .reduce((a, b) => a * b / a.gcd(b))
-    require(lcm <= BigInt(Long.MaxValue) / 1000000L,
-      s"maxRaters $maxRaters overflows the lcm scale")
-    val l = lcm.toLong
+    val l = lcmScale(maxRaters)
     val qi = graft.Names.quoted(itemCol)
     val ql = graft.Names.quoted(labelCol)
     val nic = Caches.persistTracked(
@@ -417,20 +418,20 @@ object LabelQa {
       .agg(sum(col("__c")).cast("decimal(38,0)").as("__m"))
       .agg(coalesce(sum(col("__m") * col("__m")), zeroDec).as("__m2"),
         coalesce(count(lit(1)), lit(0L)).as("n_classes"))
-    glob.crossJoin(broadcast(marg)).select(
-      col("n_items"), col("n_pairable"), col("n_classes"),
-      expr(s"cast(__don * 1000000 div greatest(${l}L * __t, 1) " +
-        "as bigint)").as("do_ppm"),
-      expr("cast((__t * __t - __m2) * 1000000 " +
-        "div greatest(__t * (__t - 1), 1) as bigint)").as("de_ppm"),
-      expr(s"""cast(case
-        | when ${l}L * (__t * __t - __m2) - __don * (__t - 1) >= 0
-        | then (${l}L * (__t * __t - __m2) - __don * (__t - 1)) * 1000000
-        |   div greatest(${l}L * (__t * __t - __m2), 1)
-        | else -((__don * (__t - 1) - ${l}L * (__t * __t - __m2)) * 1000000
-        |   div greatest(${l}L * (__t * __t - __m2), 1))
-        | end as bigint)""".stripMargin).as("alpha_ppm"))
+    alphaRatios(glob.crossJoin(broadcast(marg)), l)
   }
+
+  /** The nominal alpha card's columns from `(n_items, n_pairable,
+    * n_classes, __t, __don, __m2)` at lcm scale `l` — shared by
+    * [[alphaCard]] and [[alphaPivot]]. */
+  private def alphaRatios(counts: DataFrame, l: Long): DataFrame =
+    counts.select(
+      col("n_items"), col("n_pairable"),
+      col("n_classes").cast("bigint").as("n_classes"),
+      ppm("__don", s"${l}L * __t").as("do_ppm"),
+      ppm("__t * __t - __m2", "__t * (__t - 1)").as("de_ppm"),
+      signedPpm(s"${l}L * (__t * __t - __m2) - __don * (__t - 1)",
+        s"${l}L * (__t * __t - __m2)").as("alpha_ppm"))
 
   /** [[alphaCard]] in the ingest spelling — the [[fleissPivot]]
     * discipline applied to the MISSING-rating estimator: input
@@ -440,8 +441,8 @@ object LabelQa {
     * pinned monitor config, and every per-item quantity alpha needs
     * (k_i, Σ_c n_ic², the lcm-scaled disagreement, per-class counts
     * over pairable items) is ROW-LOCAL array arithmetic feeding ONE
-    * global aggregate — streaming-legal as-is;
-    * `Streams.alphaIngest` IS this function. Labels outside
+    * global aggregate — streaming-legal as-is, so a streaming frame
+    * runs this function unchanged. Labels outside
     * `classes` (and null elements — abstain-with-commitment) lump to
     * [[OtherLabel]]; unpairable items (k_i < 2) count in `n_items`
     * and contribute nothing (the [[alphaCard]] treatment). On a
@@ -454,38 +455,14 @@ object LabelQa {
     * length. */
   def alphaPivot(items: DataFrame, labelsCol: String,
       classes: Seq[String], maxRaters: Int): DataFrame = {
-    require(classes.nonEmpty, "need at least one pinned class")
-    require(classes.distinct == classes, "pinned classes must be distinct")
-    require(!classes.contains(OtherLabel),
-      s"'$OtherLabel' is reserved for the lump bucket")
-    require(maxRaters >= 2, "alpha needs at least two raters")
-    val lcm = (1 until maxRaters).map(BigInt(_))
-      .reduce((a, b) => a * b / a.gcd(b))
-    require(lcm <= BigInt(Long.MaxValue) / 1000000L,
-      s"maxRaters $maxRaters overflows the lcm scale")
-    val l = lcm.toLong
-    val cs = classes :+ OtherLabel
-    val ql = graft.Names.quoted(labelsCol)
-    // Column-API lambdas (the fleissPivot injection-safety rationale);
-    // a NULL array is an item with zero ratings — unpairable, counted
-    val lumped = transform(
-      coalesce(col(ql), typedLit(Seq.empty[String])),
-      x => when(x.isin(classes.map(c => c: Any): _*), x)
-        .otherwise(lit(OtherLabel)))
-    val cnt = cs.zipWithIndex.map { case (c, i) =>
-      size(filter(col("__labs"), x => x === lit(c))).cast("bigint")
-        .as(s"__c_$i")
-    }
-    val wide = items.select(lumped.as("__labs"))
-      .select(Seq(size(col("__labs")).cast("bigint").as("__ki")) ++
-        cnt: _*)
-      .withColumn("__ki",
-        when(col("__ki") > maxRaters.toLong,
-          raise_error(lit(s"alphaPivot: an item carries more than " +
-            s"$maxRaters ratings")).cast("bigint"))
+    val wide = classCounts(items, labelsCol, classes).withColumn("__ki",
+      when(col("__ki") > maxRaters.toLong,
+        raise_error(lit(s"alphaPivot: an item carries more than " +
+          s"$maxRaters ratings")).cast("bigint"))
         .otherwise(col("__ki")))
-    val ai = cs.indices.map(i => col(s"__c_$i") * col(s"__c_$i"))
-      .reduce(_ + _)
+    val l = lcmScale(maxRaters)
+    val k = classes.size + 1
+    val ai = sumOver(k)(i => col(s"__c_$i") * col(s"__c_$i"))
     val pairable = col("__ki") >= 2L
     // greatest guard: CaseWhen short-circuits, but keep the div
     // total regardless of evaluation order
@@ -501,30 +478,10 @@ object LabelQa {
         .cast("decimal(38,0)"), zeroDec).as("__t"),
       coalesce(sum(dScaled).cast("decimal(38,0)"), zeroDec)
         .as("__don")) ++
-      cs.indices.map(i =>
+      (0 until k).map(i =>
         coalesce(sum(when(pairable, col(s"__c_$i")).otherwise(0L)),
           lit(0L)).as(s"__m_$i"))
-    val one = wide.agg(aggs.head, aggs.tail: _*)
-    val m2 = cs.indices
-      .map(i => col(s"__m_$i").cast("decimal(38,0)") * col(s"__m_$i"))
-      .reduce(_ + _)
-    val nClasses = cs.indices
-      .map(i => when(col(s"__m_$i") > 0L, 1L).otherwise(0L))
-      .reduce(_ + _)
-    one.withColumn("__m2", m2).select(
-      col("n_items"), col("n_pairable"),
-      nClasses.cast("bigint").as("n_classes"),
-      expr(s"cast(__don * 1000000 div greatest(${l}L * __t, 1) " +
-        "as bigint)").as("do_ppm"),
-      expr("cast((__t * __t - __m2) * 1000000 " +
-        "div greatest(__t * (__t - 1), 1) as bigint)").as("de_ppm"),
-      expr(s"""cast(case
-        | when ${l}L * (__t * __t - __m2) - __don * (__t - 1) >= 0
-        | then (${l}L * (__t * __t - __m2) - __don * (__t - 1)) * 1000000
-        |   div greatest(${l}L * (__t * __t - __m2), 1)
-        | else -((__don * (__t - 1) - ${l}L * (__t * __t - __m2)) * 1000000
-        |   div greatest(${l}L * (__t * __t - __m2), 1))
-        | end as bigint)""".stripMargin).as("alpha_ppm"))
+    alphaRatios(classMarginals(wide.agg(aggs.head, aggs.tail: _*), k), l)
   }
 
   /** Krippendorff's alpha with a WEIGHTED difference metric over an
@@ -555,8 +512,8 @@ object LabelQa {
     * decimal(38,0). do_ppm/de_ppm are reported relative to the
     * metric's FULL-RANGE weight Wmax = W(first, last) so both stay
     * corpus-size-free; alpha_ppm = ±⌊10⁶·|L·DeN − DoN·(T−1)| /
-    * max(L·DeN, 1)⌋ (signed, the [[kappaCard]] truncation CASE —
-    * Wmax cancels in the ratio).
+    * max(L·DeN, 1)⌋ (signed, [[signedPpm]] — Wmax cancels in the
+    * ratio).
     *
     * `classes` pins the scale IN ORDER (monitor config, the
     * [[fleissPivot]] discipline). A label off the scale — or null —
@@ -579,16 +536,11 @@ object LabelQa {
   def alphaWeightedCard(ratings: DataFrame, itemCol: String,
       raterCol: String, labelCol: String, maxRaters: Int,
       classes: Seq[String], metric: String): DataFrame = {
-    require(maxRaters >= 2, "alpha needs at least two raters")
+    val l = lcmScale(maxRaters)
     require(metric == "ordinal" || metric == "interval",
       s"unknown metric '$metric' (ordinal | interval)")
     require(classes.size >= 2, "an ordered scale needs >= 2 classes")
     require(classes.distinct == classes, "classes must be distinct")
-    val lcm = (1 until maxRaters).map(BigInt(_))
-      .reduce((a, b) => a * b / a.gcd(b))
-    require(lcm <= BigInt(Long.MaxValue) / 1000000L,
-      s"maxRaters $maxRaters overflows the lcm scale")
-    val l = lcm.toLong
     val k = classes.size
     val qi = graft.Names.quoted(itemCol)
     val ql = graft.Names.quoted(labelCol)
@@ -680,17 +632,10 @@ object LabelQa {
         lit(0L)).as("n_classes")))
     glob.crossJoin(broadcast(don)).crossJoin(broadcast(den)).select(
       col("n_items"), col("n_pairable"), col("n_classes"),
-      expr(s"cast(__don * 1000000 div " +
-        s"greatest(${l}L * __t * __wmax, 1) as bigint)").as("do_ppm"),
-      expr("cast(__den * 1000000 div " +
-        "greatest(__t * (__t - 1) * __wmax, 1) as bigint)").as("de_ppm"),
-      expr(s"""cast(case
-        | when ${l}L * __den - __don * (__t - 1) >= 0
-        | then (${l}L * __den - __don * (__t - 1)) * 1000000
-        |   div greatest(${l}L * __den, 1)
-        | else -((__don * (__t - 1) - ${l}L * __den) * 1000000
-        |   div greatest(${l}L * __den, 1))
-        | end as bigint)""".stripMargin).as("alpha_ppm"))
+      ppm("__don", s"${l}L * __t * __wmax").as("do_ppm"),
+      ppm("__den", "__t * (__t - 1) * __wmax").as("de_ppm"),
+      signedPpm(s"${l}L * __den - __don * (__t - 1)", s"${l}L * __den")
+        .as("alpha_ppm"))
   }
 
   /** Agreement → ACCURACY composition (r17 verdict ask #7): the
@@ -702,64 +647,31 @@ object LabelQa {
     * accuracy, so a rater who parrots the majority class cannot buy
     * a good score with marginal skew).
     *
-    * Same exact floor-ppm arithmetic as [[kappaCard]], computed
-    * group-wise per rater in ONE plan (the [[kappaMatrix]] shape with
-    * truth as the fixed second rater): null-safe marginal join
-    * (abstain is a category), the signed truncation CASE, degenerate
-    * corpora read zero. Items without a truth row do not grade
-    * (inner join — truth is the card's universe).
+    * The [[cohen]] core grouped on the rater, with truth as side b:
+    * abstain is a category, the kappa is signed, degenerate corpora
+    * read zero. Items without a truth row do not grade (inner join —
+    * truth is the card's universe), and neither does a null rater.
     *
     * Output: `(rater, n_items, n_correct, accuracy_ppm, pe_sum,
     * pe_ppm, kappa_vs_truth_ppm)`. For any one rater the row equals
     * [[kappaCard]] over that rater's (label, truth) pairs with
-    * `n_correct = n_agree` — pinned in LabelQaSpec.
+    * `n_correct = n_agree` — pinned in LabelQaSpec and LabelQaProps.
     *
     * Scale shape: one item-keyed join against the truth slice, then
-    * everything is (raters × classes)-sized. */
+    * two aggregates, (raters × classes)- and raters-sized. */
   def accuracyCard(ratings: DataFrame, itemCol: String, raterCol: String,
       labelCol: String, truth: DataFrame, truthLabelCol: String): DataFrame = {
     val qi = graft.Names.quoted(itemCol)
-    val qr = graft.Names.quoted(raterCol)
-    val ql = graft.Names.quoted(labelCol)
-    val qt = graft.Names.quoted(truthLabelCol)
-    val paired = ratings.select(col(qi).as("__it"), col(qr).as("__r"),
-        col(ql).as("__lab"))
-      .join(truth.select(col(qi).as("__it"), col(qt).as("__tru")),
-        Seq("__it"))
-    val cells = Caches.persistTracked(
-      paired.groupBy(col("__r"), col("__lab"), col("__tru"))
-        .agg(count(lit(1)).as("__n")))
-    val na = cells.groupBy(col("__r"), col("__lab").as("__lab_a"))
-      .agg(sum(col("__n")).as("__na"))
-    val nb = cells.groupBy(col("__r"), col("__tru").as("__lab_b"))
-      .agg(sum(col("__n")).as("__nb"))
-    val marg = na.as("x").join(nb.as("y"),
-        col("x.__r") === col("y.__r") &&
-          col("x.__lab_a") <=> col("y.__lab_b"), "full_outer")
-      .groupBy(coalesce(col("x.__r"), col("y.__r")).as("__r"))
-      .agg(coalesce(sum(
-          coalesce(col("__na"), lit(0L)).cast("decimal(38,0)") *
-            coalesce(col("__nb"), lit(0L))),
-          lit(0L).cast("decimal(38,0)")).as("__pe_sum"))
-    val tot = cells.groupBy(col("__r")).agg(
-      coalesce(sum(col("__n")), lit(0L)).as("n_items"),
-      coalesce(sum(when(col("__lab") <=> col("__tru"), col("__n"))
-        .otherwise(0L)), lit(0L)).as("n_correct"))
-    tot.join(marg, Seq("__r")).select(
-      col("__r").as("rater"), col("n_items"), col("n_correct"),
-      expr("cast(cast(n_correct as decimal(38,0)) * 1000000 " +
-        "div greatest(n_items, 1L) as bigint)").as("accuracy_ppm"),
-      col("__pe_sum").cast("bigint").as("pe_sum"),
-      expr("cast(__pe_sum * 1000000 div greatest(" +
-        "cast(n_items as decimal(38,0)) * n_items, 1L) as bigint)")
-        .as("pe_ppm"),
-      expr("""cast(case
-        | when cast(n_correct as decimal(38,0)) * n_items - __pe_sum >= 0
-        | then (cast(n_correct as decimal(38,0)) * n_items - __pe_sum) * 1000000
-        |   div greatest(cast(n_items as decimal(38,0)) * n_items - __pe_sum, 1L)
-        | else -((__pe_sum - cast(n_correct as decimal(38,0)) * n_items) * 1000000
-        |   div greatest(cast(n_items as decimal(38,0)) * n_items - __pe_sum, 1L))
-        | end as bigint)""".stripMargin).as("kappa_vs_truth_ppm"))
+    val paired = ratings.select(col(qi).as("__it"),
+        col(graft.Names.quoted(raterCol)).as("rater"),
+        col(graft.Names.quoted(labelCol)).as("__la"))
+      .filter(col("rater").isNotNull)
+      .join(truth.select(col(qi).as("__it"),
+        col(graft.Names.quoted(truthLabelCol)).as("__lb")), Seq("__it"))
+    cohen(paired, Seq("rater")).select(
+      col("rater"), col("n_items"), col("n_agree").as("n_correct"),
+      col("po_ppm").as("accuracy_ppm"), col("pe_sum"), col("pe_ppm"),
+      col("kappa_ppm").as("kappa_vs_truth_ppm"))
   }
 
   /** Pairwise Cohen's-kappa MATRIX over the same long-format ratings
@@ -770,59 +682,24 @@ object LabelQa {
     * far under the others' is the drifted one (planted in
     * LabelQaSpec).
     *
-    * Same exact-ppm arithmetic as [[kappaCard]] — at two raters the
-    * single matrix row IS kappaCard's row (pinned by LabelQaSpec) —
-    * including the null-safe marginal join (abstain is a category)
-    * and the signed truncation CASE.
+    * The [[cohen]] core grouped on the rater pair — each row IS
+    * [[kappaCard]] over that pair's joined labels (pinned in
+    * LabelQaSpec and LabelQaProps).
     *
     * Scale shape: the self-join keys on the item id (k−1 rows per
     * rating row at k raters — k is 3-5, not corpus-sized); every
-    * frame after the cell aggregate is (pairs × classes)-sized. */
+    * frame after the first aggregate is (pairs × classes)-sized. */
   def kappaMatrix(ratings: DataFrame, itemCol: String, raterCol: String,
       labelCol: String): DataFrame = {
-    val qi = graft.Names.quoted(itemCol)
-    val qr = graft.Names.quoted(raterCol)
-    val ql = graft.Names.quoted(labelCol)
-    val base = ratings.select(col(qi).as("__it"), col(qr).as("__r"),
-      col(ql).as("__lab"))
-    val cells = Caches.persistTracked(base.as("a")
+    val base = ratings.select(col(graft.Names.quoted(itemCol)).as("__it"),
+      col(graft.Names.quoted(raterCol)).as("__r"),
+      col(graft.Names.quoted(labelCol)).as("__lab"))
+    val pairs = base.as("a")
       .join(base.as("b"), col("a.__it") === col("b.__it") &&
         col("a.__r") < col("b.__r"))
-      .groupBy(col("a.__r").as("rater_a"), col("b.__r").as("rater_b"),
+      .select(col("a.__r").as("rater_a"), col("b.__r").as("rater_b"),
         col("a.__lab").as("__la"), col("b.__lab").as("__lb"))
-      .agg(count(lit(1)).as("__n")))
-    val na = cells.groupBy(col("rater_a"), col("rater_b"),
-      col("__la").as("__lab_a")).agg(sum(col("__n")).as("__na"))
-    val nb = cells.groupBy(col("rater_a"), col("rater_b"),
-      col("__lb").as("__lab_b")).agg(sum(col("__n")).as("__nb"))
-    val marg = na.as("x").join(nb.as("y"),
-        col("x.rater_a") === col("y.rater_a") &&
-          col("x.rater_b") === col("y.rater_b") &&
-          col("x.__lab_a") <=> col("y.__lab_b"), "full_outer")
-      .groupBy(coalesce(col("x.rater_a"), col("y.rater_a")).as("rater_a"),
-        coalesce(col("x.rater_b"), col("y.rater_b")).as("rater_b"))
-      .agg(coalesce(sum(
-          coalesce(col("__na"), lit(0L)).cast("decimal(38,0)") *
-            coalesce(col("__nb"), lit(0L))),
-          lit(0L).cast("decimal(38,0)")).as("__pe_sum"))
-    val tot = cells.groupBy(col("rater_a"), col("rater_b")).agg(
-      coalesce(sum(col("__n")), lit(0L)).as("n_items"),
-      coalesce(sum(when(col("__la") <=> col("__lb"), col("__n"))
-        .otherwise(0L)), lit(0L)).as("n_agree"))
-    tot.join(marg, Seq("rater_a", "rater_b")).select(
-      col("rater_a"), col("rater_b"), col("n_items"), col("n_agree"),
-      expr("cast(cast(n_agree as decimal(38,0)) * 1000000 " +
-        "div greatest(n_items, 1L) as bigint)").as("po_ppm"),
-      col("__pe_sum").cast("bigint").as("pe_sum"),
-      expr("cast(__pe_sum * 1000000 div greatest(" +
-        "cast(n_items as decimal(38,0)) * n_items, 1L) as bigint)")
-        .as("pe_ppm"),
-      expr("""cast(case
-        | when cast(n_agree as decimal(38,0)) * n_items - __pe_sum >= 0
-        | then (cast(n_agree as decimal(38,0)) * n_items - __pe_sum) * 1000000
-        |   div greatest(cast(n_items as decimal(38,0)) * n_items - __pe_sum, 1L)
-        | else -((__pe_sum - cast(n_agree as decimal(38,0)) * n_items) * 1000000
-        |   div greatest(cast(n_items as decimal(38,0)) * n_items - __pe_sum, 1L))
-        | end as bigint)""".stripMargin).as("kappa_ppm"))
+    cohen(pairs, Seq("rater_a", "rater_b"))
+      .drop("n_classes_a", "n_classes_b")
   }
 }

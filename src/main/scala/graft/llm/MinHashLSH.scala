@@ -408,8 +408,8 @@ object MinHashLSH {
     * any candidate verifies at `minJaccardFp`; candidate-less
     * arrivals carry NULL best columns.
     *
-    * STREAMING-SAFE BY CONSTRUCTION — [[graft.streaming.Streams
-    * .fuzzyIngest]] runs this very function on a streaming frame:
+    * STREAMING-SAFE BY CONSTRUCTION — a streaming frame of arrivals
+    * runs this very function (pinned in StreamingSpec):
     * no persist, no distinct, no window, no universe self-join (the
     * arrival's row survives through `posexplode_outer` + left joins
     * even with no bands or no matches), and the single aggregate
@@ -749,8 +749,8 @@ object MinHashLSH {
     * (n == cap+1 — the resurrection triggers [[indexErase]] will pay
     * for).
     *
-    * STREAMING-SAFE BY CONSTRUCTION — [[graft.streaming.Streams
-    * .tombstoneIngest]] runs this very function on a streaming frame:
+    * STREAMING-SAFE BY CONSTRUCTION — a streaming frame of tombstones
+    * runs this very function (pinned in StreamingSpec):
     * the index sides are static (stream-static left joins), bands
     * derive row-locally from the loaded sets via the shared
     * [[bandKeysExpr]], unknown ids keep their row through

@@ -76,7 +76,8 @@ object Sketches {
   /** The register grid itself: `(g, b, mr)` — max rho per (group,
     * register). This IS the mergeable sketch state (merge = max), and
     * because max is an unordered streaming-safe aggregate it doubles
-    * as the continuous form ([[graft.streaming.Streams.hllRegisters]]). */
+    * as the continuous form (a streaming frame runs this very
+    * function, pinned in StreamingSpec). */
   def hllRegisters(df: DataFrame, groupCol: Column, keyCol: Column): DataFrame =
     df.select(groupCol.as("g"), md5Hash32(keyCol).as("h"))
       .withColumn("b", col("h") % HllRegisters)

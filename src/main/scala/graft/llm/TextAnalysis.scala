@@ -256,7 +256,7 @@ object TextAnalysis {
        |    % 2 = 0)) as bigint)""".stripMargin)
 
   /** The full q293 watermark screen as ONE spelling shared by the
-    * batch card and [[graft.streaming.Streams.watermarkIngest]] (the
+    * batch card and a streaming frame of arrivals (the
     * q272 discipline — batch and stream can never disagree): per doc,
     * bigram count, green count, green ppm, and the exact-integer
     * one-sided 3σ binomial flag (2g > n AND (2g−n)² ≥ 9n — no square

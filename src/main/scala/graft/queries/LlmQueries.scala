@@ -1235,8 +1235,8 @@ object LlmQueries {
   // The ingest shape: the corpus's dup-gram blocklist trains once
   // into the durable catalog and each arrival batch (doc_id % 10 ==
   // 0) strips against the LOADED index — the corpus is never
-  // re-tokenized per batch, and `Streams.spanStripIngest` runs the
-  // SAME function on the live feed (stream == batch pinned).
+  // re-tokenized per batch, and [[graft.llm.Dedup.stripSpans]] runs
+  // unchanged on the live feed (stream == batch pinned).
   def q301SpanStripLoaded(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(s, dir)
     val root = graft.llm.Artifacts.ensure(dir,
@@ -1818,15 +1818,15 @@ object LlmQueries {
 
   // ---- q303: label-consensus monitor (kappa, ingest spelling) ----
   // q302's card the way the LIVE feed must run it: kappaCard's
-  // aggregate-of-aggregate marginal join is streaming-illegal, so
+  // aggregate of an aggregate is streaming-illegal, so
   // [[graft.llm.LabelQa.kappaPivot]] pins the class list as monitor
   // config and computes the whole card in ONE global aggregate
   // (per-class conditional-sum marginals + the agree count) with the
   // kappa arithmetic row-local on the single aggregated row —
-  // `Streams.kappaIngest` IS this function (stream == batch pinned in
-  // StreamingSpec). The pinned list here is {en, zh, es}, so the card
+  // a streaming frame runs this function unchanged (stream == batch
+  // pinned in StreamingSpec). The pinned list here is {en, zh, es}, so the card
   // also EXERCISES the OTHER lump (de/fr and the no-evidence label
-  // fold into one bucket, the driftIngest discipline). State at
+  // fold into one bucket, the chiSquarePivot discipline). State at
   // scale: 2·(K+1)+2 longs total, whatever the feed length.
   private[queries] val KappaClasses = Seq("en", "zh", "es")
   def q303KappaMonitor(s: SparkSession, dir: String): DataFrame = {
@@ -1913,8 +1913,8 @@ object LlmQueries {
   // [[graft.llm.LabelQa.fleissPivot]] pins the class list and the
   // expected rater count as monitor config and computes the identical
   // card from one-row-per-item label ARRAYS in ONE global aggregate —
-  // `Streams.fleissIngest` IS the function (stream == batch pinned in
-  // StreamingSpec). Unpinned labels and null lump to `(other)` (the
+  // a streaming frame runs the function unchanged (stream == batch
+  // pinned in StreamingSpec). Unpinned labels and null lump to `(other)` (the
   // q303 bucket discipline). The oracle replays the 3-rater chain,
   // the lump, and the pooled-marginal arithmetic.
   def q313FleissMonitor(s: SparkSession, dir: String): DataFrame = {
@@ -1968,11 +1968,12 @@ object LlmQueries {
   // its label ARRAY (possibly SHORTER than the roster — the missing
   // ratings alpha exists for arrive naturally at ingest), class list
   // and maxRaters pinned as monitor config, every per-item quantity
-  // row-local into ONE global aggregate — `Streams.alphaIngest` IS
-  // [[graft.llm.LabelQa.alphaPivot]] (stream == batch pinned in
-  // AlphaSpec). Unpinned labels and null votes lump to `(other)`.
-  // The oracle replays the 3-rater chain, the missing slice, the
-  // lump, and the lcm-scaled coincidence arithmetic.
+  // row-local into ONE global aggregate —
+  // [[graft.llm.LabelQa.alphaPivot]], which a streaming frame runs
+  // unchanged (stream == batch pinned in AlphaSpec). Unpinned labels
+  // and null votes lump to `(other)`. The oracle replays the 3-rater
+  // chain, the missing slice, the lump, and the lcm-scaled coincidence
+  // arithmetic.
   def q318AlphaMonitor(s: SparkSession, dir: String): DataFrame = {
     // collect_list drops nulls — pre-lump a null vote to the bucket
     // the pivot lumps it to anyway (the q313 discipline)
@@ -2896,8 +2897,8 @@ object LlmQueries {
   // Vocabulary the training pool never saw scores at the smoothing
   // constant instead of silently dropping (dropping would change
   // n_tok and bias the mean toward seen vocab).
-  // [[graft.streaming.Streams.importanceIngest]] runs the SAME
-  // function at ingest time (stream == batch pinned in StreamingSpec).
+  // [[graft.llm.Importance.scoreArrivals]] runs unchanged at ingest
+  // time on a stream (stream == batch pinned in StreamingSpec).
   def q282ImportanceServe(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(s, dir)
     val root = graft.llm.Artifacts.ensure(dir,
@@ -3092,8 +3093,8 @@ object LlmQueries {
   // q285 is the batch card; this is what the STANDING monitor runs
   // ([[graft.llm.Drift.chiSquarePivot]]): cells pinned up front as
   // monitor config, one broadcast baseline join per arrival row, ONE
-  // aggregate — streaming-legal, and [[graft.streaming.Streams
-  // .driftIngest]] IS this function. On this corpus the observed
+  // aggregate — streaming-legal, so a streaming frame runs this
+  // function unchanged. On this corpus the observed
   // values stay inside the configured list, so the pivot equals the
   // card row-for-row on every source that has arrivals — the oracle
   // is q285's with the zero-arrival rows dropped (the one documented

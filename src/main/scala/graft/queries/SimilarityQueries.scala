@@ -165,8 +165,8 @@ object SimilarityQueries {
   // (the ' graft'-suffixed plants) verify at ~0.9 Jaccard while the
   // exact re-uploads verify at 1.0, and clean arrivals pass with
   // zero candidates. The corpus is never re-tokenized per batch.
-  // [[graft.streaming.Streams.fuzzyIngest]] runs the SAME function
-  // at ingest time (stream == batch pinned in StreamingSpec).
+  // [[graft.llm.MinHashLSH.fuzzyAdmission]] runs unchanged at ingest
+  // time on a stream (stream == batch pinned in StreamingSpec).
   private val AdmitCap = 32
   private val AdmitMinJaccardFp = 500000L
   private def fuzzyArrivals(docs: DataFrame): DataFrame =

@@ -241,31 +241,6 @@ object Streams {
         coalesce(col("__n_corpus"), lit(0L)).as("n_corpus"))
   }
 
-  /** Stream-static fuzzy entity resolution: arriving dirty names match
-    * against the static master list through the length-band blocking
-    * join ([[graft.llm.Fuzzy.editDistanceJoin]] — probe explosion,
-    * band equi-join, codegen'd levenshtein verify are all STATELESS,
-    * so the operator runs unchanged under Structured Streaming with
-    * no watermark or state store). Emits `(id_a, id_b, lev)` match
-    * rows; arrivals matching nothing emit nothing (new-entity
-    * detection composes downstream against the emitted ids). */
-  def fuzzyIngest(stream: DataFrame, master: DataFrame, maxDist: Int): DataFrame =
-    graft.llm.Fuzzy.editDistanceJoin(stream, master, maxDist)
-
-  /** Streaming ANN ingest — the vector twin of [[spatialIngest]]:
-    * embeddings arriving as a stream are cell-assigned against the
-    * STATIC corpus's trained fixed-point codebook and near-dup-checked
-    * against the corpus's cell members
-    * ([[graft.llm.IvfIndex.annIngest]] — broadcast-codebook
-    * projection + stream-static left join, fully stateless, so no
-    * watermark or state store and any output mode works). One row per
-    * (arrival, in-cell near-dup) plus a null-`dup_of` row for clean
-    * arrivals: the q29/q70 batch pair's admission decision, made at
-    * arrival time. */
-  def annIngest(stream: DataFrame, corpus: DataFrame, nLists: Int,
-      minDotFp: Long, nIter: Int = 3): DataFrame =
-    graft.llm.IvfIndex.annIngest(stream, corpus, nLists, minDotFp, nIter)
-
   /** Streaming BPE encode — tokenize arriving documents against a
     * STATIC trained tokenizer (the [[graft.llm.Artifacts]] load-side:
     * `merges` in learn order + the `(sym, sym_id)` vocabulary). The
@@ -480,19 +455,6 @@ object Streams {
           "div greatest(n_windows, 1L) as bigint)"))
   }
 
-  /** Streaming rule gate — q69's curation rules at crawl time, the
-    * most natural place for them: the whole gate is ONE codegen'd
-    * projection ([[graft.llm.TextAnalysis.ruleFilter]], zero shuffle
-    * — plan-asserted in batch), so it runs unchanged on a stream
-    * with no watermark and no state store. Arrivals carry the full
-    * per-rule reasons bitmask, not just a verdict, so a downstream
-    * monitor can alert on WHICH rule started firing (the q224 axis)
-    * without a second pass. Stream == batch pinned by StreamingSpec
-    * — the same call IS the batch oracle. */
-  def ruleGateIngest(stream: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    graft.llm.TextAnalysis.ruleFilter(stream, idCol, textCol)
-
   /** Streaming PII scrub — the q59/q231 detectors at crawl time,
     * where a redaction pipeline actually wants them: every arriving
     * document carries its per-detector match counts AND the redacted
@@ -588,138 +550,6 @@ object Streams {
         "cast(cast(novel_bytes as decimal(38,0)) * 1000000 " +
           "div greatest(total_bytes, 1L) as bigint)"))
   }
-
-  /** Streaming fuzzy (near-dup) admission — q272's gate at ingest
-    * time: each arriving document shingles and bands ITSELF
-    * row-locally, probes the LOADED corpus band index by stream-static
-    * equi-join, verifies every candidate with the exact `inter_count`
-    * Jaccard against the shipped shingle sets, and reports one
-    * admission row per arrival. This IS
-    * [[graft.llm.MinHashLSH.fuzzyAdmission]] — one implementation,
-    * streaming-safe by construction (no distinct, no window, one
-    * duplicate-invariant aggregate), so stream and batch verdicts
-    * cannot drift (pinned in StreamingSpec). Corpus state stays a
-    * static frame (broadcast or shuffled by size) — never stream
-    * state, never a driver map; run with update/complete output mode
-    * (the admission row for an arrival is an aggregate). */
-  def fuzzyIngest(stream: DataFrame, idCol: String, textCol: String,
-      corpusBands: DataFrame, corpusSets: DataFrame, shingleN: Int,
-      numHashes: Int, minJaccardFp: Long): DataFrame =
-    graft.llm.MinHashLSH.fuzzyAdmission(stream, idCol, textCol,
-      corpusBands, corpusSets, shingleN, numHashes, 1, minJaccardFp)
-
-  /** Streaming importance-scoring at ingest — q282's serve path on
-    * the live crawl: each arrival scores token-locally against the
-    * broadcast ≤B-row weight table (loaded once from the shipped
-    * artifact), with the artifact's smoothing constant standing in
-    * for training-unseen buckets. Delegates to
-    * [[graft.llm.Importance.scoreArrivals]] — token-level scoring
-    * means exactly ONE aggregation and no per-bucket pre-rollup, so
-    * the function is streaming-legal as-is and stream == batch by
-    * construction (pinned in StreamingSpec). Run with
-    * update/complete output mode (the score row is an aggregate);
-    * per-arrival state is its token count, never corpus-sized. */
-  def importanceIngest(stream: DataFrame, idCol: String, textCol: String,
-      weights: DataFrame, unseenWppm: Long, buckets: Int): DataFrame =
-    graft.llm.Importance.scoreArrivals(stream, idCol, textCol, weights,
-      unseenWppm, buckets)
-
-  /** Streaming watermark screen — q293's synthetic-text gate at
-    * ingest, where it actually runs: each arriving doc's green-bigram
-    * count and the exact-integer 3σ binomial flag are one STATELESS
-    * codegen projection ([[graft.llm.TextAnalysis.greenCount]] over
-    * the bigram list — no aggregate, no state, any output mode), so
-    * a crawler drops watermarked synthetic text before it costs
-    * storage. Batch spelling is the oracle (q293); stream == batch
-    * pinned in StreamingSpec. */
-  def watermarkIngest(stream: DataFrame, idCol: String, textCol: String,
-      minPairs: Long): DataFrame =
-    graft.llm.TextAnalysis.watermarkScreen(stream, idCol, textCol, minPairs)
-
-  /** Streaming bootstrap CI — q283's resampler on the live feed: the
-    * running mean of an integer statistic arrives WITH its
-    * uncertainty, because every replicate mean updates per
-    * micro-batch ([[graft.llm.Bootstrap.replicateMeans]] verbatim —
-    * the row×reps explode followed by exactly ONE aggregation is
-    * streaming-legal as-is; weights are derived md5 arithmetic, so
-    * identical rows weigh identically whenever they arrive and
-    * stream == batch by construction, pinned in StreamingSpec). Run
-    * with update/complete output mode; state is `reps` rows total,
-    * whatever the stream length. */
-  def bootstrapIngest(stream: DataFrame, keyCol: String, statCol: String,
-      reps: Int): DataFrame =
-    graft.llm.Bootstrap.replicateMeans(stream, qcol(keyCol), qcol(statCol),
-      reps)
-
-  /** Streaming mixture-drift monitor — q289's chi-square gate on the
-    * live feed: each arrival row joins the broadcast baseline pivot
-    * FIRST, then ONE group-keyed aggregate builds the per-source cell
-    * pivot, and the χ²/df/critical-value verdict is row-local
-    * arithmetic on the aggregated row
-    * ([[graft.llm.Drift.chiSquarePivot]] verbatim —
-    * join-before-aggregate + single aggregation makes the function
-    * streaming-legal as-is; stream == batch pinned in StreamingSpec).
-    * Run with update/complete output mode; state is one pivoted row
-    * per source (sources × (cells+2) longs), never corpus-sized.
-    * The cell list is the monitor's pinned config — values outside
-    * it lump into the OTHER bucket, so an unseen language still
-    * alarms against its zero baseline. */
-  def driftIngest(stream: DataFrame, baseline: DataFrame,
-      groupCol: String, cellCol: String, cells: Seq[String]): DataFrame =
-    graft.llm.Drift.chiSquarePivot(stream, baseline, groupCol, cellCol,
-      cells)
-
-  /** Streaming label-consensus monitor — q303's chance-corrected
-    * agreement gate on the live feed: the arriving rows carry the two
-    * labelers' verdicts (attached upstream row-locally — the langId
-    * heuristic is pure column arithmetic, and a classifier labeler
-    * rides [[classifyIngest]]'s one-aggregation scoring; kappa over
-    * the pair is then the only aggregate in THIS query), the class
-    * list is the monitor's pinned config, and the whole card is ONE
-    * global aggregate + row-local kappa arithmetic
-    * ([[graft.llm.LabelQa.kappaPivot]] verbatim — the batch card and
-    * the live gate cannot disagree; stream == batch pinned in
-    * StreamingSpec). Labels outside the pinned list (and null — an
-    * abstaining labeler) lump into the OTHER bucket. Run with
-    * update/complete output mode; state is 2·(K+1)+2 longs TOTAL,
-    * whatever the stream length — a falling live kappa is the
-    * earliest sign one of the labelers drifted. */
-  def kappaIngest(stream: DataFrame, aCol: String, bCol: String,
-      classes: Seq[String]): DataFrame =
-    graft.llm.LabelQa.kappaPivot(stream, aCol, bCol, classes)
-
-  /** Streaming k-labeler consensus monitor — q313's Fleiss card live:
-    * each arriving consensus record (one row per item, the label
-    * ARRAY of all its raters' votes) contributes row-local array
-    * arithmetic to ONE global aggregate, with the class list AND the
-    * expected rater count pinned as monitor config (both of the batch
-    * card's data-derived fields are aggregate-of-aggregate, so the
-    * pivot replaces them — the [[kappaIngest]] discipline
-    * generalized to k raters). This IS
-    * [[graft.llm.LabelQa.fleissPivot]] — one implementation, so the
-    * live consensus and the batch card cannot disagree (stream ==
-    * batch pinned in StreamingSpec, plus a drifted rater cratering
-    * the live kappa). Run with complete output mode; state is
-    * 2·(K+1)+4 longs total, whatever the feed length. */
-  def fleissIngest(stream: DataFrame, labelsCol: String,
-      classes: Seq[String], expectedRaters: Int): DataFrame =
-    graft.llm.LabelQa.fleissPivot(stream, labelsCol, classes,
-      expectedRaters)
-
-  /** Streaming missing-rating agreement monitor — q318's
-    * Krippendorff's alpha live: each arriving consensus record (one
-    * row per item with its label ARRAY, possibly SHORTER than the
-    * roster — the missing ratings alpha exists for arrive naturally
-    * at ingest) contributes row-local lcm-scaled coincidence
-    * arithmetic to ONE global aggregate, with the class list and
-    * `maxRaters` pinned as monitor config. This IS
-    * [[graft.llm.LabelQa.alphaPivot]] — one implementation, so the
-    * live monitor and the batch card cannot disagree (stream ==
-    * batch pinned in AlphaSpec). Run with complete output mode;
-    * state is 2·K + 5 longs total, whatever the feed length. */
-  def alphaIngest(stream: DataFrame, labelsCol: String,
-      classes: Seq[String], maxRaters: Int): DataFrame =
-    graft.llm.LabelQa.alphaPivot(stream, labelsCol, classes, maxRaters)
 
   /** Streaming fold-debt meter — q312's compaction policy live at
     * crawl cadence: each arriving epoch summary `(artifact, epoch,
@@ -876,60 +706,6 @@ object Streams {
       graft.llm.Artifacts.compact(spark, root): Unit
   }
 
-  /** Streaming duplicated-span removal — q301's strip at ingest: each
-    * arriving document's tokens and dup-gram starts are two
-    * projections of the SAME stream unioned (no self-join), the
-    * corpus's shipped gram blocklist joins stream-static, and ONE
-    * doc-keyed aggregate reassembles the survivors row-locally. This
-    * IS [[graft.llm.Dedup.stripSpans]] — one implementation, so the
-    * live feed and the batch card cannot disagree about a span
-    * (stream == batch pinned in StreamingSpec). Run with
-    * update/complete output mode; per-arrival state is its own token
-    * count, never corpus-sized. */
-  def spanStripIngest(stream: DataFrame, idCol: String, textCol: String,
-      gramN: Int, dupGrams: DataFrame): DataFrame =
-    graft.llm.Dedup.stripSpans(stream, idCol, textCol, gramN, dupGrams)
-
-  /** Streaming 1-bit-screened fuzzy admission — q298's hot-storage
-    * gate at ingest: each arriving document bands itself row-locally,
-    * probes the LOADED band index, Hamming-screens every candidate
-    * against the 64×-smaller packed-word frame, and touches the COLD
-    * shingle-set artifact only for screen survivors. This IS
-    * [[graft.llm.MinHashLSH.fuzzyAdmissionBbit]] — streaming-safe by
-    * the [[fuzzyIngest]] construction (posexplode_outer + left joins
-    * keep candidate-less arrivals; one duplicate-invariant
-    * aggregate), so stream and batch verdicts cannot drift (pinned in
-    * StreamingSpec). Run with update/complete output mode. */
-  def fuzzyIngestBbit(stream: DataFrame, idCol: String, textCol: String,
-      corpusBands: DataFrame, corpusWords: DataFrame,
-      corpusSets: DataFrame, shingleN: Int, numHashes: Int,
-      screenMinPpm: Long, minJaccardFp: Long): DataFrame =
-    graft.llm.MinHashLSH.fuzzyAdmissionBbit(stream, idCol, textCol,
-      corpusBands, corpusWords, corpusSets, shingleN, numHashes, 1,
-      screenMinPpm, minJaccardFp)
-
-  /** Streaming erasure-tombstone meter — the deletion queue's view of
-    * [[graft.llm.MinHashLSH.indexErase]]: each arriving
-    * right-to-be-forgotten id probes the LOADED signature index
-    * (stream-static left joins against the shipped sets and counts
-    * frames) and reports what its erase will cost — whether the index
-    * knows it, the set/band rows to remove, how many are live in the
-    * capped bands, and how many buckets its removal pulls back under
-    * the cap (the resurrections the fold will pay for). This IS
-    * [[graft.llm.MinHashLSH.eraseImpact]] — one implementation,
-    * streaming-safe by construction (posexplode_outer + left joins
-    * keep unknown ids, one duplicate-insensitive aggregate), so
-    * stream and batch verdicts cannot drift (pinned in
-    * StreamingSpec). Run with update/complete output mode (the
-    * impact row is an aggregate); per-tombstone state is its band
-    * count, never corpus-sized. The erase APPLY itself stays a batch
-    * fold — this meter is the admission/audit half. */
-  def tombstoneIngest(stream: DataFrame, idCol: String,
-      corpusSets: DataFrame, corpusCounts: DataFrame, numHashes: Int,
-      cap: Int): DataFrame =
-    graft.llm.MinHashLSH.eraseImpact(stream, idCol, corpusSets,
-      corpusCounts, numHashes, 1, cap)
-
   /** Streaming perceptual-dedup meter — q247's dHash at upload time:
     * each arriving image payload decodes row-locally
     * ([[graft.llm.Multimodal.dHashBits]], the SAME kernel as the
@@ -1052,7 +828,8 @@ object Streams {
     * source table's batch card. The batch card's exact
     * `n_distinct_rows` column is the one non-streamable aggregate
     * (countDistinct is unsupported in streaming); at ingest time its
-    * estimator is the HLL register twin ([[hllRegisters]] keyed on
+    * estimator is the HLL register grid
+    * ([[graft.llm.Sketches.hllRegisters]] keyed on
     * the same hash). The modulo is applied AFTER the decimal sum
     * (not per-batch), which is exact because `(a+b) mod m =
     * ((a mod m)+(b mod m)) mod m` and DECIMAL(38,0) holds any
@@ -1070,17 +847,6 @@ object Streams {
         expr(s"cast(sum_raw % ${graft.llm.Sketches.ChecksumMod}L as bigint)")
           .as("sum_hash"),
         col("min_hash"), col("max_hash"))
-
-  /** Streaming HLL register build — the continuous twin of
-    * [[graft.llm.Sketches.hllRegisters]]. The register grid is a
-    * max-aggregate, which is unordered and mergeable, so the streaming
-    * aggregation IS the sketch: state is fixed at groups×64 rows no
-    * matter how much data flows through, and the estimator reads the
-    * live grid whenever it likes (update/complete mode). Stream==batch
-    * equivalence is exact (same code path) and pinned in
-    * StreamingSpec. */
-  def hllRegisters(rows: DataFrame, groupCol: String, keyCol: String): DataFrame =
-    graft.llm.Sketches.hllRegisters(rows, qcol(groupCol), qcol(keyCol))
 
   /** Streaming deterministic bottom-k sample — the continuous twin of
     * the q262 batch card. The same bounded [[graft.llm.TopKAgg]]
@@ -1105,19 +871,6 @@ object Streams {
         (-col("e._1")).cast("bigint").as("h"),
         col("e._2").cast("bigint").as("id"))
   }
-
-  /** Streaming log2-histogram build — the continuous twin of
-    * [[graft.llm.Sketches.log2Histogram]]: the bucket grid is a pure
-    * count per (group, bucket) cell — unordered, mergeable addition —
-    * so streaming state is fixed at groups×≤64 rows however much data
-    * flows through, and [[graft.llm.Sketches.histQuantile]] reads the
-    * live grid for a running p50/p90 at any moment (the q261 batch
-    * card, continuously). Stream==batch is exact (same code path);
-    * pinned in StreamingSpec, including a quantile read off the live
-    * grid. */
-  def log2Histogram(rows: DataFrame, groupCol: String,
-      valueCol: Column): DataFrame =
-    graft.llm.Sketches.log2Histogram(rows, qcol(groupCol), valueCol)
 
   /** Streaming count-min counter build — the continuous twin of
     * [[graft.llm.Sketches.cmCounters]]: the depth×width grid is a

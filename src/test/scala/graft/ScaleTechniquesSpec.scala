@@ -426,11 +426,13 @@ class ScaleTechniquesSpec extends AnyFunSuite with SparkTestSession {
 
   test("q302/q303: no cartesian blowup; the kappa monitor is ONE " +
       "aggregation pass (its streaming-legality witness)") {
-    // q302's only cross joins are one-row summary frames (tot × marg
-    // — the q278 exemption does not apply here, so check row bounds
-    // instead: every CartesianProduct/BroadcastNestedLoop in the plan
-    // must sit above an Aggregate on BOTH sides, i.e. join inputs are
-    // aggregated one-row cards, never corpus rows)
+    // q302's kappa is two stacked aggregates with no join of its own;
+    // any cross join left in either plan (the NB labeler's one-row
+    // default verdict) must join bounded frames. The q278 exemption
+    // does not apply here, so check row bounds instead: every
+    // CartesianProduct/BroadcastNestedLoop in the plan must sit above
+    // an Aggregate on BOTH sides, i.e. join inputs are aggregated
+    // cards, never corpus rows
     def descendants(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SparkPlan] = {
       val below = p match {
@@ -466,7 +468,7 @@ class ScaleTechniquesSpec extends AnyFunSuite with SparkTestSession {
     // grouped aggregation above it. The labeler chain itself carries
     // the NB vote aggregates; the witness is that the card adds
     // exactly one more (the global, grouping-key-free one), which is
-    // what lets Streams.kappaIngest run it on a live feed.
+    // what lets kappaPivot run on a live feed.
     val q303 = SparkEntry.queries("q303_kappa_monitor")(
       spark, "/root/testdata/sf0.001")
     val nodes303 = graft.PlanNodes.all(q303.queryExecution.executedPlan)
@@ -478,7 +480,7 @@ class ScaleTechniquesSpec extends AnyFunSuite with SparkTestSession {
     val streamIn = spark.readStream.format("rate").load()
       .selectExpr("cast(value % 3 as string) as lab_a",
         "cast(value % 5 as string) as lab_b")
-    val q = graft.streaming.Streams.kappaIngest(
+    val q = graft.llm.LabelQa.kappaPivot(
         streamIn, "lab_a", "lab_b", Seq("0", "1", "2"))
       .writeStream.format("memory").queryName("kappa_legality")
       .outputMode("complete").start()

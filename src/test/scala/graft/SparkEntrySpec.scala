@@ -35,21 +35,4 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(rowsOnly.isEmpty,
       s"unexpected rows-only queries: $rowsOnly — add an oracle or document why not")
   }
-
-  test("explain audit covers every query or names a justified exclusion") {
-    // the audit list is DERIVED (queries.keySet -- excluded), so a new
-    // query cannot silently dodge the plan audit; what CAN drift is the
-    // exclusion map — it must only name real queries and must say why
-    val phantom = ExplainAudit.excluded.keySet -- SparkEntry.queries.keySet
-    assert(phantom.isEmpty,
-      s"excluded entries that are not queries: $phantom")
-    val unjustified = ExplainAudit.excluded.filter(_._2.trim.isEmpty).keySet
-    assert(unjustified.isEmpty,
-      s"exclusions without a justification: $unjustified")
-    assert(ExplainAudit.auditList.toSet ++ ExplainAudit.excluded.keySet ==
-      SparkEntry.queries.keySet,
-      "audit list + exclusions must partition the query surface")
-    assert(ExplainAudit.auditList == ExplainAudit.auditList.sorted &&
-      ExplainAudit.auditList.distinct == ExplainAudit.auditList)
-  }
 }

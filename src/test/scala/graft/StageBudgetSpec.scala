@@ -21,56 +21,52 @@ class StageBudgetSpec extends AnyFunSuite with SparkTestSession {
 
   private val Dir = "/root/testdata/sf0.001"
 
-  /** Budgets: (maxJobs, maxStages), meant as ceil(1.3 × the count) a
-    * warm iteration of one `graft.Bench` run at sf0.001 recorded (320
-    * queries, 2 iterations, counted by `JobCounter` as this spec
-    * counts). AQE submits each shuffle stage as its own job, so jobs ≈
-    * stages here. Measured jobs/stages: q134 12, q87 18, q100 23,
-    * q170 45, q172 22, q283 2, q124 12, q125 8, q209 13, q220 29,
-    * q295 29, q308 19, q309 29, q310 36 (35 on some runs), q311 12,
-    * q312 3, q313 17, q314 20, q269 23/33, q288 22, q315 4, q316 27,
-    * q317 28, q318 17. A budget is part of its test's name, so
-    * lowering one renames the test: the five with the most slack
-    * (q283, q125, q311, q312, q315) were lowered to ceil(1.3 ×); the
-    * others still carry looser budgets set before schema inference
-    * stopped running jobs (ROADMAP lists their ceil(1.3 ×) values).
+  /** Budgets: (maxJobs, maxStages) at ceil(1.3 × the count) a warm
+    * iteration of one `graft.Bench` run at sf0.001 recorded (counted by
+    * `JobCounter` as this spec counts). AQE submits each shuffle stage
+    * as its own job, so jobs ≈ stages here. Measured jobs/stages: q134
+    * 12, q87 18, q100 23, q170 45, q172 22, q283 2, q124 12, q125 8,
+    * q209 13, q220 29, q295 29, q302 15, q308 19, q309 20, q310 36 (35
+    * on some runs), q311 12, q312 3, q313 17, q314 20, q269 23/33, q288
+    * 22, q315 4, q316 27, q317 19, q318 17. The budget lives in the
+    * failure message, not the test name, so moving it renames nothing.
     * Budgets only go down. */
   private val budgets = Seq(
-    "q134_assoc_rules" -> (20, 20),
-    "q87_pagerank" -> (25, 25),
-    "q100_triangles" -> (32, 32),
-    "q170_hits" -> (60, 60),
-    "q172_seeded_pagerank" -> (30, 30),
+    "q134_assoc_rules" -> (16, 16),
+    "q87_pagerank" -> (24, 24),
+    "q100_triangles" -> (30, 30),
+    "q170_hits" -> (59, 59),
+    "q172_seeded_pagerank" -> (29, 29),
     "q283_bootstrap_ci" -> (3, 3),
     // the cards whose bench times spread most between boxes
-    "q124_itemsets" -> (17, 17),
+    "q124_itemsets" -> (16, 16),
     "q125_ivf_balance" -> (11, 11),
-    "q209_nb_calibration" -> (19, 19),
+    "q209_nb_calibration" -> (17, 17),
     "q220_overlap_estimate" -> (38, 38),
-    "q295_erase_apply" -> (39, 40),
+    "q295_erase_apply" -> (38, 38),
     // the labeler and sweep cards (q310 runs one scan + count +
     // coverage chain per gramN of its three-gramN grid)
-    "q308_fleiss_kappa" -> (26, 26),
-    "q309_kappa_matrix" -> (39, 39),
+    "q302_annotator_kappa" -> (20, 20),
+    "q308_fleiss_kappa" -> (25, 25),
+    "q309_kappa_matrix" -> (26, 26),
     "q310_span_sweep" -> (47, 47),
     "q311_bbit_screen_sweep" -> (16, 16),
     "q312_fold_debt" -> (4, 4),
     // q313 and q318 include the labelerRatings cache-fill jobs: the
     // persist saves the NB-chain replay per consumer
-    "q313_fleiss_monitor" -> (24, 24),
+    "q313_fleiss_monitor" -> (23, 23),
     "q314_cap_sweep" -> (26, 26),
     // q269's first iteration reads artifacts; the budget keeps
     // scheduling growth from hiding there
-    "q269_mutual_knn_loaded" -> (33, 46),
-    "q288_paired_bootstrap" -> (30, 30),
+    "q269_mutual_knn_loaded" -> (30, 43),
+    "q288_paired_bootstrap" -> (29, 29),
     "q315_compact_serve" -> (6, 6),
-    "q316_krippendorff_alpha" -> (37, 37),
-    "q317_rater_accuracy" -> (39, 39),
-    "q318_alpha_monitor" -> (24, 24))
+    "q316_krippendorff_alpha" -> (36, 36),
+    "q317_rater_accuracy" -> (25, 25),
+    "q318_alpha_monitor" -> (23, 23))
 
   budgets.foreach { case (name, (maxJobs, maxStages)) =>
-    test(s"$name stays inside its scheduling budget " +
-        s"(jobs <= $maxJobs, stages <= $maxStages)") {
+    test(s"$name stays inside its scheduling budget") {
       graft.llm.Caches.unpersistAll(blocking = true)
       // warm pass OUTSIDE the counters: artifact-backed queries
       // (q295) build their parquet artifacts on first touch — the
@@ -99,7 +95,9 @@ class StageBudgetSpec extends AnyFunSuite with SparkTestSession {
   // constants, unseen-token default) and q172's PageRank rounds
   // (out-degree, seed flag, edge side) give every such frame one
   // consumer; DuplicateExchanges names any exchange that ran twice.
-  Seq("q308_fleiss_kappa", "q172_seeded_pagerank").foreach { name =>
+  // The Cohen cards (q302, q309, q317) read each pair frame once.
+  Seq("q308_fleiss_kappa", "q172_seeded_pagerank", "q302_annotator_kappa",
+    "q309_kappa_matrix", "q317_rater_accuracy").foreach { name =>
     test(s"$name runs no exchange twice") {
       graft.llm.Caches.unpersistAll(blocking = true)
       val df = SparkEntry.queries(name)(spark, Dir)

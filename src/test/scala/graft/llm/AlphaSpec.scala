@@ -93,7 +93,7 @@ class AlphaSpec extends AnyFunSuite with SparkTestSession {
       Seq("de", "en"), Seq("no", "en", "no"))
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Seq[String]]
-    val q = graft.streaming.Streams.alphaIngest(
+    val q = LabelQa.alphaPivot(
         input.toDF().withColumnRenamed("value", "labs"),
         "labs", Seq("en", "no"), 3)
       .writeStream.outputMode("complete")

@@ -622,7 +622,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         "to speak of and the story continues on and on for a while"),
       (3L, "1 2 3 4 5 6 7 8 9 0 1 2 3 4 5 6 7 8 9 0 1 2 3 4 5"))
     val input = MemoryStream[(Long, String)]
-    val query = Streams.ruleGateIngest(
+    val query = graft.llm.TextAnalysis.ruleFilter(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text")
       .writeStream.format("memory").queryName("rulegate_out")
       .outputMode("append").start()
@@ -805,8 +805,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val arrivals = Seq((100L, "hammer"), (101L, "hammr"), (102L, "wrencch"),
       (103L, "sprocket"), (104L, "xx"))
     val input = MemoryStream[(Long, String)]
-    val query = Streams.fuzzyIngest(input.toDF().toDF("id", "name"),
-        master, maxDist = 2)
+    val query = graft.llm.Fuzzy.editDistanceJoin(
+        input.toDF().toDF("id", "name"), master, maxDist = 2)
       .writeStream.format("memory").queryName("fuzzy_out")
       .outputMode("append").start()
     try {
@@ -838,8 +838,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (102L, Array(0f, 0f, 1f, 0f))) // orthogonal — admits clean
     val minDot = 900000L // cos ≈ 0.9 in dot_fp micro-units (Σ floor(aᵢbᵢ·10⁶))
     val input = MemoryStream[(Long, Array[Float])]
-    val query = Streams.annIngest(input.toDF().toDF("vec_id", "embedding"),
-        corpus, nLists = 2, minDotFp = minDot, nIter = 2)
+    val query = graft.llm.IvfIndex.annIngest(
+        input.toDF().toDF("vec_id", "embedding"), corpus, nLists = 2,
+        minDotFp = minDot, nIter = 2)
       .writeStream.format("memory").queryName("ann_out")
       .outputMode("append").start()
     try {
@@ -850,7 +851,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
           if (r.isNullAt(2)) None else Some(r.getLong(2)),
           if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
       val got = shape(spark.table("ann_out"))
-      val batch = shape(Streams.annIngest(
+      val batch = shape(graft.llm.IvfIndex.annIngest(
         arrivals.toDF("vec_id", "embedding"), corpus, 2, minDot, 2))
       assert(got === batch)
       // dup arrivals carry match evidence; the clean one keeps a
@@ -968,7 +969,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val all = batch1 ++ batch2
 
     val hin = MemoryStream[(Long, String)]
-    val hllQ = Streams.hllRegisters(hin.toDF().toDF("g", "k"), "g", "k")
+    val hllQ = graft.llm.Sketches.hllRegisters(hin.toDF().toDF("g", "k"),
+        col("g"), col("k"))
       .writeStream.format("memory").queryName("hll_out")
       .outputMode("complete").start()
     val cin = MemoryStream[(Long, String)]
@@ -1008,7 +1010,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val batch2 = (41 to 90).map(i => ("s" + i % 2, (i * 13 % 1000).toLong))
     val all = batch1 ++ batch2
     val in = MemoryStream[(String, Long)]
-    val q = Streams.log2Histogram(in.toDF().toDF("g", "n"), "g", col("n"))
+    val q = graft.llm.Sketches.log2Histogram(in.toDF().toDF("g", "n"),
+        col("g"), col("n"))
       .writeStream.format("memory").queryName("hist_out")
       .outputMode("complete").start()
     try {
@@ -1052,9 +1055,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (12L, "completely unrelated sentence about marine biology and corals"),
       (13L, ""))                                                                 // empty
     val in = MemoryStream[(Long, String)]
-    val q = Streams.fuzzyIngest(in.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", bands, sets, shingleN = 3, numHashes = 8,
-        minJaccardFp = 500000L)
+    val q = graft.llm.MinHashLSH.fuzzyAdmission(
+        in.toDF().toDF("doc_id", "text"), "doc_id", "text", bands, sets,
+        shingleN = 3, numHashes = 8, rowsPerBand = 1, minJaccardFp = 500000L)
       .writeStream.format("memory").queryName("fuzzy_out")
       .outputMode("complete").start()
     try {
@@ -1091,7 +1094,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (11L, "completely novel sentence with no repeats"),
       (12L, ""))
     val in = MemoryStream[(Long, String)]
-    val q = Streams.spanStripIngest(in.toDF().toDF("doc_id", "text"),
+    val q = graft.llm.Dedup.stripSpans(in.toDF().toDF("doc_id", "text"),
         "doc_id", "text", 3, grams)
       .writeStream.format("memory").queryName("strip_out")
       .outputMode("complete").start()
@@ -1131,8 +1134,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (12L, "completely unrelated sentence about marine biology and corals"),
       (13L, ""))
     val in = MemoryStream[(Long, String)]
-    val q = Streams.fuzzyIngestBbit(in.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", bands, words, sets, shingleN = 3, numHashes = 8,
+    val q = graft.llm.MinHashLSH.fuzzyAdmissionBbit(
+        in.toDF().toDF("doc_id", "text"), "doc_id", "text", bands, words,
+        sets, shingleN = 3, numHashes = 8, rowsPerBand = 1,
         screenMinPpm = 250000L, minJaccardFp = 500000L)
       .writeStream.format("memory").queryName("fuzzybb_out")
       .outputMode("complete").start()
@@ -1169,8 +1173,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       "text", 2, N, 1, Cap)
     val tombstones = Seq(Tuple1(1L), Tuple1(4L), Tuple1(999L))
     val in = MemoryStream[Tuple1[Long]]
-    val q = Streams.tombstoneIngest(in.toDF().toDF("doc_id"),
-        "doc_id", built.sets, built.counts, N, Cap)
+    val q = graft.llm.MinHashLSH.eraseImpact(in.toDF().toDF("doc_id"),
+        "doc_id", built.sets, built.counts, N, 1, Cap)
       .writeStream.format("memory").queryName("tomb_out")
       .outputMode("complete").start()
     try {
@@ -1210,7 +1214,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val arrivals = Seq((10L, "alpha beta"), (11L, "totallynew vocabulary"),
       (12L, ""), (13L, "epsilon zeta"))
     val in = MemoryStream[(Long, String)]
-    val q = Streams.importanceIngest(in.toDF().toDF("doc_id", "text"),
+    val q = graft.llm.Importance.scoreArrivals(in.toDF().toDF("doc_id", "text"),
         "doc_id", "text", weights, w0, B)
       .writeStream.format("memory").queryName("imp_out")
       .outputMode("complete").start()
@@ -1241,8 +1245,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (2L, "short doc"), (3L, ""))
     val in = MemoryStream[(Long, String)]
     // stateless projection => append mode is legal (no aggregate)
-    val q = Streams.watermarkIngest(in.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", minPairs = 50L)
+    val q = graft.llm.TextAnalysis.watermarkScreen(
+        in.toDF().toDF("doc_id", "text"), "doc_id", "text", minPairs = 50L)
       .writeStream.format("memory").queryName("wm_out")
       .outputMode("append").start()
     try {
@@ -1265,7 +1269,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val rows1 = (0 until 150).map(i => (i.toLong, (i % 9).toLong))
     val rows2 = (150 until 260).map(i => (i.toLong, (i % 9).toLong))
     val in = MemoryStream[(Long, Long)]
-    val q = Streams.bootstrapIngest(in.toDF().toDF("id", "x"), "id", "x", 16)
+    val q = graft.llm.Bootstrap.replicateMeans(in.toDF().toDF("id", "x"),
+        col("id"), col("x"), 16)
       .writeStream.format("memory").queryName("boot_out")
       .outputMode("complete").start()
     try {
@@ -1301,7 +1306,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (i.toLong, if (i % 4 == 0) "no" else "en", "xx")
     }
     val in = MemoryStream[(Long, String, String)]
-    val q = Streams.kappaIngest(in.toDF().toDF("id", "lab_a", "lab_b"),
+    val q = graft.llm.LabelQa.kappaPivot(in.toDF().toDF("id", "lab_a", "lab_b"),
         "lab_a", "lab_b", pinned)
       .writeStream.format("memory").queryName("kappa_out")
       .outputMode("complete").start()
@@ -1345,7 +1350,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       (i.toLong, Seq(t, t, "xx"))
     }
     val in = MemoryStream[(Long, Seq[String])]
-    val q = Streams.fleissIngest(in.toDF().toDF("id", "labs"),
+    val q = graft.llm.LabelQa.fleissPivot(in.toDF().toDF("id", "labs"),
         "labs", pinned, 3)
       .writeStream.format("memory").queryName("fleiss_out")
       .outputMode("complete").start()
@@ -1460,7 +1465,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       else ("s1", if (i % 8 == 1) "en" else "de")
     }
     val in = MemoryStream[(String, String)]
-    val q = Streams.driftIngest(in.toDF().toDF("src", "lang"),
+    val q = graft.llm.Drift.chiSquarePivot(in.toDF().toDF("src", "lang"),
         baseline, "src", "lang", cells)
       .writeStream.format("memory").queryName("drift_out")
       .outputMode("complete").start()
